@@ -1,27 +1,36 @@
-"""Benchmark harness: runs every registered query at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec, ...}, "sf": ...}.
+"""Benchmark harness: runs every registered query and production twin at
+$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
+local[$SPARK_GRAFT_CPUS] and prints ONE JSON line: {"metric": ...,
+"value": total_sec, "unit": "sec", "queries": {name: sec, ...},
+"jobs": {name: n}, "stages": {name: n}, "sf": ...}.
 
-Queries are fully executed via the noop sink (whole plan runs, nothing is
-collected to the driver — measures engine time, not toPandas serialization).
+Usage: python bench.py [--repeats N] [NAME ...]
 
-``--repeats N`` runs every query N times back-to-back and records the
+``NAME ...`` times only those registry entries or ``@`` twins, in the
+order given (an unknown name exits before anything runs); without names
+the whole registry runs in canonical order, then every twin. Each entry
+goes through ``simtradedata_spark.runner.run_query``: fully executed via
+the noop sink (the whole plan runs, nothing is collected — engine time,
+not toPandas serialization), scratch released between entries. ``jobs``
+and ``stages`` count what the entry launched, eager build jobs included.
+
+``--repeats N`` runs every entry N times back-to-back and records the
 per-query MEDIAN (plus a compact min/max spread) — use ≥3 when recording
 the repo-root ``benchmarks_*.json`` artifacts so a single unlucky draw
-(r8's full_curation_funnel@xxh64 at 2x its median) can't become the
-authoritative number. Default 1, so the driver's per-round run stays one
-pass.
+can't become the authoritative number. Default 1, so the per-round run
+stays one pass.
 
 Every artifact also carries a ``calibration`` block: a fixed-work
 pure-Python loop and a fixed tiny Spark job, timed on THIS host in THIS
 session. Round-over-round comparisons divide by the calibration ratio
-(tools/scale_report.py --normalize) so a 1.4x-slower host (r7+r8 both
-recorded on degraded hosts) no longer masquerades as a code regression.
+(tools/scale_report.py reports the normalized ratio when both artifacts
+carry the block) so a slower host does not masquerade as a code
+regression.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import statistics
@@ -30,9 +39,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from simtradedata_spark.functions.caching import release_scratch
-from simtradedata_spark.queries import QUERIES
+from simtradedata_spark.runner import run_query, warm_up
 from simtradedata_spark.session import get_spark
+from tools.prod_variants import builders, resolve
 
 
 def calibration_probe(spark) -> dict[str, float]:
@@ -65,101 +74,55 @@ def calibration_probe(spark) -> dict[str, float]:
     }
 
 
-def run_query(fn, spark, sf_dir: str) -> float:
-    t0 = time.time()
-    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    dt = time.time() - t0
-    # Several operators persist()/localCheckpoint() intermediates (minhash
-    # signatures, CC edge lists, the RFM frame). Across a 120+-query session
-    # those pile up in storage memory and slow LATER queries by seconds
-    # (measured +30 s on the bench tail) — free the scratch between queries
-    # so each number reflects the query, not its predecessors' leftovers.
-    # Session-lifetime memos (synthetic-market checkpoint, PTrade pinned
-    # tables) are protected and survive; blanket clearCache() killed those
-    # and cost the market-query family +3 s each.
-    release_scratch(spark)
-    # Nudge the ContextCleaner (same fix bench_scale_point.py carries from
-    # r7): across a 189-query session the freed-block references and
-    # shuffle files of earlier queries pile up until the JVM GCs, and on a
-    # slow host the session TAIL measured up to 28x its r7 value
-    # (purchases_within_7d 18.2 s at position 99 vs 0.75 s with this nudge
-    # — position bias, not query cost; entries >5x clustered at positions
-    # 99-164 and vanished once the cleaner ran per-query: same-host
-    # back-to-back totals 502 s without vs 376 s with).
-    spark.sparkContext._jvm.System.gc()
-    return dt
-
-
-def main() -> None:
-    repeats = 1
-    argv = sys.argv[1:]
-    if "--repeats" in argv:
-        i = argv.index("--repeats")
-        try:
-            repeats = int(argv[i + 1])
-        except (IndexError, ValueError):
-            sys.exit("usage: bench.py [--repeats N]  (N >= 1)")
-        if repeats < 1:
-            sys.exit("--repeats must be >= 1")
+def main(argv: list[str] | None = None) -> None:
+    ap = argparse.ArgumentParser(prog="bench.py")
+    ap.add_argument("--repeats", type=int, default=1)
+    ap.add_argument("names", nargs="*", metavar="NAME")
+    args = ap.parse_args(argv)
+    if args.repeats < 1:
+        ap.error("--repeats must be >= 1")
+    repeats = args.repeats
+    names = resolve(args.names)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     # input-size-derived initial shuffle partitions: floors at cores for the
     # driver scales (plans unchanged), rises toward 4x cores at 10-100x
     # replicas where the pinned-cores ceiling measurably spills
     spark = get_spark("bench", input_dir=sf_dir)
+    builds = builders(spark, sf_dir, names)
 
-    # Warm up JVM/codegen/Arrow paths so the first timed queries don't eat
-    # session start-up. Warming only the first entry proved insufficient in
-    # r4: JIT tiering keeps inflating queries for the first ~30 s of the
-    # session, which manufactured phantom 2-3x "regressions" for whatever
-    # the front-window rotation put early. Warm the cheapest scan plus the
-    # first THREE registry entries, plus one window-function and one
-    # Arrow-batch query so those engine paths are compiled too.
-    # canonical order here too — warming "the first 3" of a rotating
-    # registry made warm-up composition drift round to round
-    warm_names = sorted(QUERIES)[:3] + [
-        "active_nations", "supplier_moving_avg", "quality_classifier",
-        # tokenize/HOF/n-gram codegen: the ExactSubstr + sketch families sit
-        # at window positions 7-10, early enough to eat residual JIT without
-        # this (measured 8.2 s first-run vs 3.7-4.4 s steady-state for
-        # cross_doc_dup_coverage in the r5d recording)
-        "dup_gram_coverage",
-        # md5-minhash banding codegen (r11): the one heavy engine path the
-        # list above never touches — its first cold draw measured 9.6 s vs
-        # 3.5 s steady-state for incremental_dedup (same mechanism as the
-        # r5d cross_doc recording), and the funnel/dedup/incremental family
-        # all ride it. Warming the cheapest family member keeps JIT
-        # tiering out of ~8 timed entries.
-        "minhash_near_dups",
-    ]
-    for warm in dict.fromkeys(n for n in warm_names if n in QUERIES):
-        QUERIES[warm][0](spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        release_scratch(spark)
-
+    warm_up(spark, sf_dir)
     calibration = calibration_probe(spark)
 
     timings: dict[str, float] = {}
+    jobs: dict[str, int] = {}
+    stages: dict[str, int] = {}
     spread: dict[str, dict] = {}
     errors: dict[str, int] = {}
 
-    def _record(name: str, thunk) -> None:
-        runs = []
+    # Timing order is canonical (alphabetical), decoupled from the
+    # registry order: the registry's front 50 is the driver-gate window and
+    # rotates every round, and bench position measurably moves sub-second
+    # queries (entries moved >30 slots later read 1.27x, earlier 0.94x —
+    # session JIT/GC state, not code).
+    for name, build in builds.items():
+        runs, counts = [], []
         for _ in range(repeats):
             try:
-                runs.append(round(thunk(), 3))
+                dt, n_jobs, n_stages = run_query(spark, build)
             except Exception as e:  # a failed query must not hide the others
                 print(f"bench error in {name}: {e}", file=sys.stderr)
+                continue
+            runs.append(round(dt, 3))
+            counts.append((n_jobs, n_stages))
         # A query that failed on ANY run gets a NEGATIVE headline entry
         # (-median, or -1.0 when every run failed) so intermittent
-        # failures surface in `timings` itself — the pre-repeats -1.0
-        # convention, and what keeps it out of the >=0-filtered totals —
-        # plus an `errors` count (r9 advisory: the count living only in
-        # `spread` let a flaky query report a clean median).
+        # failures surface in `queries` itself and stay out of the
+        # >=0-filtered totals, plus an `errors` count.
         med = round(statistics.median(runs), 3) if runs else 1.0
         n_err = repeats - len(runs)
         timings[name] = -med if n_err else med
+        jobs[name], stages[name] = counts[0] if counts else (-1, -1)
         if n_err:
             errors[name] = n_err
         if repeats > 1:
@@ -169,41 +132,10 @@ def main() -> None:
                 "errors": n_err,
             }
 
-    # CANONICAL (alphabetical) timing order, decoupled from registry order:
-    # the registry's front 50 is the driver-gate rotation window and
-    # changes every round, and bench position measurably moves sub-second
-    # queries (r10 measurement: entries moved >30 slots later read 1.27x,
-    # earlier 0.94x — session JIT/GC state, not code). A fixed order makes
-    # per-query numbers comparable across rounds regardless of rotation.
-    for name in sorted(QUERIES):
-        fn = QUERIES[name][0]
-        _record(name, lambda: run_query(fn, spark, sf_dir))
-
-    # Production-backend variants (shared definitions in
-    # tools/prod_variants.py so bench_scale_point.py measures the SAME
-    # twins at the 10x/100x scale points — r6 verdict item 1): the
-    # registered queries run md5 / pinned sizes ONLY so the DuckDB oracle
-    # can recompute them; real callers get xxhash64, auto-sized blooms,
-    # LSH cosine, IVF ANN, GEMM SemDeDup. Bench both so the recorded
-    # numbers state production cost, not verification cost.
-    from tools.prod_variants import prod_variants
-
-    def _run_variant(thunk) -> float:
-        t0 = time.time()
-        try:
-            thunk().write.format("noop").mode("overwrite").save()
-            return time.time() - t0
-        finally:
-            release_scratch(spark)
-            spark.sparkContext._jvm.System.gc()
-
-    for name, thunk in prod_variants(spark, sf_dir).items():
-        _record(name, lambda: _run_variant(thunk))
-
     total = round(sum(t for t in timings.values() if t >= 0), 3)
-    # Sub-totals (round-3 verdict): the @xxh64/@lsh entries are PRODUCTION
-    # re-runs of five oracle-suite queries with the cheaper non-oracle hash
-    # backend — a naive grand total double-counts those families by ~8 s.
+    # The @twins are PRODUCTION re-runs of oracle-suite queries with the
+    # cheaper non-oracle backends (xxhash64, auto-sized blooms, LSH, IVF,
+    # GEMM SemDeDup); a naive grand total double-counts those families.
     # oracle_suite_sec is the round-over-round comparable number.
     oracle_total = round(
         sum(t for n, t in timings.items() if t >= 0 and "@" not in n), 3
@@ -215,6 +147,8 @@ def main() -> None:
         "oracle_suite_sec": oracle_total,
         "production_variants_sec": round(total - oracle_total, 3),
         "queries": timings,
+        "jobs": jobs,
+        "stages": stages,
         "sf": sf,
         "repeats": repeats,
         "calibration": calibration,

@@ -27,6 +27,10 @@ DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 # total cores".
 SHUFFLE_TARGET_PARTITION_BYTES = 16 * 1024 * 1024
 
+# Shuffle/spill codec and file-split size; get_spark's comments say why.
+IO_CODEC = "zstd"
+MAX_PARTITION_BYTES = 8 * 1024 * 1024
+
 
 def _dir_bytes(path: str) -> int:
     total = 0
@@ -123,31 +127,16 @@ def get_spark(
     n = cpus or DEFAULT_CPUS
     # AQE COALESCES shuffle partitions downward from the initial value but
     # never splits above it (skew-join splitting aside) — so the initial
-    # count is the ceiling on shuffle parallelism/granularity. Priority:
-    # SPARK_GRAFT_SHUFFLE_PARTITIONS (explicit override, validated here so
-    # a bad value fails fast instead of opaquely inside the JVM) >
-    # derive_shuffle_partitions(input_dir bytes) > cores. At the
-    # certification scales the derivation floors at cores, so plans and
-    # oracle hashes are untouched; at 10-100x replicas it raises the
-    # ceiling the way a cluster job sets 2-3x total cores, and AQE still
-    # coalesces small stages back down.
+    # count is the ceiling on shuffle parallelism/granularity. It is
+    # derive_shuffle_partitions(input_dir bytes), else cores; extra_conf
+    # overrides it like any other conf. At the certification scales the
+    # derivation floors at cores, so plans and oracle hashes are untouched;
+    # at 10-100x replicas it raises the ceiling the way a cluster job sets
+    # 2-3x total cores, and AQE still coalesces small stages back down.
     input_bytes: int | None = None
     if input_dir is not None and os.path.isdir(input_dir):
         input_bytes = _dir_bytes(input_dir)
-    env_parts = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
-    if env_parts is not None:
-        try:
-            parts = int(env_parts)
-        except ValueError:
-            raise ValueError(
-                f"SPARK_GRAFT_SHUFFLE_PARTITIONS={env_parts!r} is not an int"
-            ) from None
-        if parts <= 0:
-            raise ValueError(
-                f"SPARK_GRAFT_SHUFFLE_PARTITIONS={parts} must be > 0"
-            )
-        shuffle_parts = str(parts)
-    elif input_bytes is not None:
+    if input_bytes is not None:
         shuffle_parts = str(derive_shuffle_partitions(input_bytes, n))
     else:
         if input_dir is not None:
@@ -177,11 +166,8 @@ def get_spark(
         # 1000x curation point: the 8-stage chain's barriers keep every
         # stage's shuffle files alive until the scratch release, and the
         # lz4 total exceeded the disk (the same sum a cluster pays in
-        # aggregate spill bandwidth). Override via SPARK_GRAFT_IO_CODEC.
-        .config(
-            "spark.io.compression.codec",
-            os.environ.get("SPARK_GRAFT_IO_CODEC", "zstd"),
-        )
+        # aggregate spill bandwidth). Override via extra_conf.
+        .config("spark.io.compression.codec", IO_CODEC)
         # Serialized storage blocks (localCheckpoint barriers, DISK-spilled
         # caches) are UNcompressed by default; the curation chain's
         # checkpointed barriers carry full document text, which zstd cuts
@@ -191,12 +177,8 @@ def get_spark(
         # so the default 128 MB split reads them in ONE task and the other 31
         # cores idle (measured 2-3x on the TPC-H-shape scans). On a real
         # cluster with TB-scale tables raise this back toward 128 MB via
-        # SPARK_GRAFT_MAX_PARTITION_BYTES — more splits there just add
-        # scheduling overhead.
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", str(8 * 1024 * 1024)),
-        )
+        # extra_conf — more splits there just add scheduling overhead.
+        .config("spark.sql.files.maxPartitionBytes", str(MAX_PARTITION_BYTES))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         # The oracle harness collects full results for value comparison; at
         # the 30x scale replica a 54M-row frame tops Spark's 1 GB default.
@@ -252,13 +234,15 @@ def get_spark(
     # another thread that an is-check would miss); a fresh session always
     # matches, so the warning fires exactly on silent reuse. Callers that
     # need the derived confs (the scale-point benches) must stop() first.
+    # An extra_conf value wins over the derived count, so compare with it.
+    want = (extra_conf or {}).get("spark.sql.shuffle.partitions", shuffle_parts)
     got = spark.conf.get("spark.sql.shuffle.partitions", None)
-    if got != shuffle_parts:
+    if got != want:
         import warnings
 
         warnings.warn(
             "get_spark(): reusing an existing SparkSession — requested "
-            f"spark.sql.shuffle.partitions={shuffle_parts} ignored "
+            f"spark.sql.shuffle.partitions={want} ignored "
             f"(session has {got}). stop() the old session first if the "
             "derived confs matter.",
             stacklevel=2,

@@ -7,6 +7,10 @@ its own pool, so no query starves behind a long job's stages) — and
 reports the wall-time speedup. local[32] has the cores to overlap the
 scheduling gaps that serialize a single-query run.
 
+Scratch is released only between the phases, never per query:
+``release_scratch`` is session-wide, not thread-scoped, so a release in one
+thread could free a concurrent query's checkpoints.
+
 Usage: python tools/bench_concurrent.py [sf_dir]   → one JSON line
 """
 
@@ -20,8 +24,8 @@ from concurrent.futures import ThreadPoolExecutor
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from simtradedata_spark.functions.caching import release_scratch
 from simtradedata_spark.queries import QUERIES
+from simtradedata_spark.runner import release_scratch, warm_up
 from simtradedata_spark.session import get_spark
 
 MIX = [
@@ -46,9 +50,7 @@ def main() -> None:
     spark = get_spark(
         "bench-concurrent", extra_conf={"spark.scheduler.mode": "FAIR"}
     )
-    for name in MIX[:2]:  # warm codegen/scan paths
-        run_one(spark, sf_dir, name)
-    release_scratch(spark)
+    warm_up(spark, sf_dir)
 
     t0 = time.time()
     for name in MIX:

@@ -1,41 +1,30 @@
-"""Selective scale-point benchmark: run a fixed set of LINEAR-path
-registry queries PLUS their production-backend twins at an arbitrary
-replica directory and print one JSON line — the tool behind SCALE.md's
-two-decade (sf0.1 → sf1.0 → sf10) scaling table.
+"""Selective scale-point benchmark: bench.py restricted to a fixed set of
+LINEAR-path registry queries PLUS their production-backend twins, at an
+arbitrary replica directory — the tool behind SCALE.md's two-decade
+(sf0.1 → sf1.0 → sf10) scaling table.
 
-bench.py runs the FULL registry and is the per-round artifact; at 100×
-volume the documented quadratic oracle-exact baselines (exact cosine,
-exact SemDeDup, all-pairs clustering) would dominate the wall-clock by
-design, so this tool runs only the production-shaped families whose cost
-the 100 TB story depends on. The subset is pinned below — extend it when
-a new linear family lands. The ``@xxh64``/``@lsh``/``@ivf``/``@gemm``
-twins share their definitions with bench.py via tools/prod_variants.py
-(r6 verdict item 1: the twins were measured only to 10× before).
+bench.py without names runs the FULL registry; at 100× volume the
+documented quadratic oracle-exact baselines (exact cosine, exact SemDeDup,
+all-pairs clustering) would dominate the wall-clock by design, so this
+runs only the production-shaped families whose cost the 100 TB story
+depends on. The subset is pinned below — extend it when a new linear
+family lands. Prints bench.py's JSON line (same warm-up, runner and
+``--repeats`` median/spread).
 
 Usage: python tools/bench_scale_point.py [--repeats N] SF_DIR [query ...]
 
-``--repeats N`` runs every entry N times back-to-back (scratch released +
-GC-nudged between runs) and records the MEDIAN, with min/max kept in the
-artifact — single recordings at the 100x point carry ±30% session noise
-(r7: the same twin subset measured 1.019x in the morning and ~1.21x on the
-same code that evening; SCALE.md documents the disambiguation).
+Use ``--repeats 3`` or more at the 100x point: single recordings there
+carry ±30% session noise (SCALE.md documents the disambiguation).
 """
 
 from __future__ import annotations
 
-import argparse
-import json
 import os
-import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from simtradedata_spark.functions.caching import release_scratch
-from simtradedata_spark.queries import QUERIES
-from simtradedata_spark.session import get_spark
-from tools.prod_variants import prod_variants
+import bench
 
 # Linear production families, one representative per plan shape.
 LINEAR_SET = [
@@ -91,91 +80,17 @@ TWIN_SET = [
     "full_curation_funnel@xxh64",
 ]
 
-# JIT/codegen warm-up runs OUTSIDE the timed subset (r6 verdict wrong #2:
-# warming names[:2] recorded warm-cache numbers for two subset entries
-# while the rest ran cold-ish — not like-for-like).
-WARM_SET = ["active_nations", "quality_classifier"]
-
 
 def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--repeats", type=int, default=1)
-    ap.add_argument("sf_dir")
-    ap.add_argument("names", nargs="*")
-    args = ap.parse_args()
-    sf_dir, repeats = args.sf_dir, max(1, args.repeats)
-    names = args.names or (LINEAR_SET + TWIN_SET)
-    # Session first (ONE construction point — prod_variants used to build
-    # it as a side effect before name validation), initial shuffle
-    # partitions derived from the replica's on-disk bytes (session.py:
-    # clamp(bytes/64MB, cores, 4x cores) — the measured sf10 win as the
-    # default, not an env opt-in).
-    spark = get_spark("bench_scale_point", input_dir=sf_dir)
-    # variants built only when a twin name is requested — validation no
-    # longer eagerly loads tables for runs that would exit on a bad name
-    variants = (
-        prod_variants(spark, sf_dir)
-        if any(n not in QUERIES for n in names)
-        else {}
-    )
-    unknown = [n for n in names if n not in QUERIES and n not in variants]
-    if unknown:
-        sys.exit(f"unknown queries: {unknown}")
-    for w in WARM_SET:
-        try:
-            QUERIES[w][0](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-        except Exception as e:  # warm-up must never kill the run
-            print(f"warm-up error in {w}: {e}", file=sys.stderr)
-        release_scratch(spark)
-
-    def _run_once(name: str) -> float:
-        if name in QUERIES:
-            thunk = lambda: QUERIES[name][0](spark, sf_dir)  # noqa: E731
-        else:
-            thunk = variants[name]
-        t0 = time.time()
-        try:
-            thunk().write.format("noop").mode("overwrite").save()
-            dt = round(time.time() - t0, 3)
-        except Exception as e:
-            dt = -1.0
-            print(f"error in {name}: {e}", file=sys.stderr)
-        release_scratch(spark)
-        # Nudge the ContextCleaner: at the 100x point each query leaves
-        # GBs of shuffle files + freed block references behind; without a
-        # GC the session's TAIL queries run up to 3x slower (measured:
-        # exact_substr_trim@xxh64 118 s at position 36 vs 33 s isolated),
-        # which is session-state bias, not the query's cost.
-        spark.sparkContext._jvm.System.gc()
-        return dt
-
-    timings, spread = {}, {}
-    for name in names:
-        runs = [_run_once(name) for _ in range(repeats)]
-        ok = [r for r in runs if r >= 0]
-        timings[name] = round(statistics.median(ok), 3) if ok else -1.0
-        if repeats > 1:
-            # min/max over SUCCESSFUL runs only — a -1.0 failure marker in
-            # min would silently corrupt spread-based reads (ADVICE r8).
-            spread[name] = {
-                "min": min(ok) if ok else -1.0,
-                "max": max(ok) if ok else -1.0,
-                "runs": runs,
-                "errors": len(runs) - len(ok),
-            }
-    out = {
-        "metric": "scale_point",
-        "sf_dir": sf_dir,
-        "value": round(sum(t for t in timings.values() if t >= 0), 3),
-        "unit": "sec",
-        "repeats": repeats,
-        "queries": timings,
-    }
-    if spread:
-        out["spread"] = spread
-    print(json.dumps(out))
+    argv = sys.argv[1:]
+    opts = argv[:2] if argv[:1] == ["--repeats"] else []
+    rest = argv[len(opts):]
+    if not rest:
+        sys.exit(__doc__)
+    # bench.py reads the replica from the env; get_spark derives the
+    # initial shuffle partitions from the replica's on-disk bytes
+    os.environ["SPARK_GRAFT_SF_DIR"] = rest[0]
+    bench.main(opts + (rest[1:] or LINEAR_SET + TWIN_SET))
 
 
 if __name__ == "__main__":

@@ -24,8 +24,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 
 from simtradedata_spark.catalog import TESTDATA_TABLES
-from simtradedata_spark.functions.caching import release_scratch
 from simtradedata_spark.queries import QUERIES
+from simtradedata_spark.runner import run_query, warm_up
 from simtradedata_spark.session import get_spark
 
 
@@ -40,19 +40,14 @@ def main() -> None:
             f"read_parquet('{sf_dir}/{t}.parquet')"
         )
     spark = get_spark("bench-vs-duckdb")
-    QUERIES["active_nations"][0](spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
+    warm_up(spark, sf_dir)
 
     per: dict[str, dict[str, float]] = {}
     for name in names:
         fn, sql = QUERIES[name]
         if not sql:
             continue
-        t0 = time.time()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        t_spark = time.time() - t0
-        release_scratch(spark)
+        t_spark = run_query(spark, lambda: fn(spark, sf_dir))[0]
         t0 = time.time()
         con.execute(sql).fetchall()
         t_duck = time.time() - t0

@@ -19,6 +19,7 @@ import pandas as pd
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from simtradedata_spark.catalog import TESTDATA_TABLES
+from simtradedata_spark.runner import release_scratch
 from simtradedata_spark.session import get_spark
 
 
@@ -111,8 +112,6 @@ def main() -> int:
     con = duck_con(sf_dir)
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
-
-    from simtradedata_spark.functions.caching import release_scratch
 
     failures = 0
     for name, fn in qs.items():

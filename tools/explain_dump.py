@@ -20,30 +20,19 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from simtradedata_spark.queries import QUERIES
 from simtradedata_spark.session import get_spark
+from tools.prod_variants import builders, resolve
 
 
 def main() -> None:
     if len(sys.argv) < 4:
         sys.exit(__doc__)
-    out_dir, suffix, names = sys.argv[1], sys.argv[2], sys.argv[3:]
+    out_dir, suffix, names = sys.argv[1], sys.argv[2], resolve(sys.argv[3:])
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark("explain_dump", input_dir=sf_dir)
-    variants = None
-    for name in names:
-        if name in QUERIES:
-            df = QUERIES[name][0](spark, sf_dir)
-        else:
-            if variants is None:
-                from tools.prod_variants import prod_variants
-
-                variants = prod_variants(spark, sf_dir)
-            if name not in variants:
-                print(f"SKIP unknown query: {name}", file=sys.stderr)
-                continue
-            df = variants[name]()
+    for name, build in builders(spark, sf_dir, names).items():
+        df = build()
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )

@@ -1,31 +1,45 @@
-"""Production-backend variant definitions, shared by bench.py and
-tools/bench_scale_point.py (r6 verdict item 1: the twins must be measured
-at every scale point, so they need ONE definition, not two drifting
-copies).
+"""Production-backend variant definitions and query-name resolution,
+shared by bench.py (and through it tools/bench_scale_point.py) and
+tools/explain_dump.py: the twins must be measured at every scale point,
+so they need ONE definition, not drifting copies.
 
 The registry queries run md5 / pinned sizes ONLY so the DuckDB oracle can
 recompute them; real callers get xxhash64 (JVM-native), data-sized blooms,
 LSH-bucketed cosine, IVF-pruned ANN, and GEMM SemDeDup. ``prod_variants``
 returns ``{name: thunk}`` where each thunk builds the variant's DataFrame
 against the given sf_dir; names carry the ``base@backend`` convention the
-bench sub-totals key on.
+bench sub-totals key on. ``resolve`` checks and expands the entry names a
+command line asks for.
 """
 
 from __future__ import annotations
 
-from typing import Callable
+import sys
+from functools import partial
+from typing import Callable, Sequence
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from simtradedata_spark.functions.caching import scratch_persist
+from simtradedata_spark.queries import QUERIES
 
 
 def prod_variants(
     spark: SparkSession, sf_dir: str
 ) -> dict[str, Callable[[], DataFrame]]:
     from simtradedata_spark.catalog import load_table
+
+    return _variants(
+        load_table(spark, sf_dir, "documents"),
+        load_table(spark, sf_dir, "embeddings"),
+    )
+
+
+def _variants(
+    docs: DataFrame, emb: DataFrame
+) -> dict[str, Callable[[], DataFrame]]:
     from simtradedata_spark.operators.clustering import semantic_dedup_gemm
     from simtradedata_spark.operators.decontam import char_ngram_overlap
     from simtradedata_spark.operators.dedup import (
@@ -52,9 +66,6 @@ def prod_variants(
         count_min_sketch,
     )
     from simtradedata_spark.operators.substrings import strip_cross_doc_spans
-
-    docs = load_table(spark, sf_dir, "documents")
-    emb = load_table(spark, sf_dir, "embeddings")
 
     def _incr_prod() -> DataFrame:
         corpus = docs.filter("doc_id % 10 != 0")
@@ -195,4 +206,29 @@ def prod_variants(
                 select_top=50, seq_len=4096,
             )
         ),
+    }
+
+
+# Every thunk reads its tables lazily, so the names need no session.
+VARIANTS = tuple(_variants(None, None))
+
+
+def resolve(names: Sequence[str]) -> list[str]:
+    """The entries a command line names, in its order; with no names,
+    every registry query in canonical (alphabetical) order, then every
+    twin. Exits on an unknown name before any session starts."""
+    unknown = [n for n in names if n not in QUERIES and n not in VARIANTS]
+    if unknown:
+        sys.exit(f"unknown queries: {unknown}")
+    return list(names) or sorted(QUERIES) + list(VARIANTS)
+
+
+def builders(
+    spark: SparkSession, sf_dir: str, names: Sequence[str]
+) -> dict[str, Callable[[], DataFrame]]:
+    """``{name: thunk}`` building each resolved entry's DataFrame."""
+    twins = prod_variants(spark, sf_dir) if set(names) - set(QUERIES) else {}
+    return {
+        n: partial(QUERIES[n][0], spark, sf_dir) if n in QUERIES else twins[n]
+        for n in names
     }

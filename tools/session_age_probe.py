@@ -6,7 +6,7 @@ Usage: python tools/session_age_probe.py [n_prime] [conf_k=v ...]
 
 Runs the probe queries on a fresh session, then executes the first
 ``n_prime`` registry queries (canonical order, bench methodology:
-noop sink + release_scratch + GC), then re-times the probes. Prints
+``simtradedata_spark.runner.run_query``), then re-times the probes. Prints
 fresh/aged medians plus driver heap and GC-time deltas so retention-conf
 A/Bs have a sensitive, bounded-cost signal (a full bench is 7 min and
 ±2x noisy; this is ~3 min and isolates the aging mechanism).
@@ -21,20 +21,15 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from simtradedata_spark.functions.caching import release_scratch
 from simtradedata_spark.queries import QUERIES
+from simtradedata_spark.runner import run_query, warm_up
 from simtradedata_spark.session import get_spark
 
 PROBES = ["dedup_clusters", "cluster_representatives", "minute_bars_fold"]
 
 
 def _run(spark, sf_dir, name) -> float:
-    t0 = time.time()
-    QUERIES[name][0](spark, sf_dir).write.format("noop").mode("overwrite").save()
-    dt = time.time() - t0
-    release_scratch(spark)
-    spark.sparkContext._jvm.System.gc()
-    return dt
+    return run_query(spark, lambda: QUERIES[name][0](spark, sf_dir))[0]
 
 
 def _jvm_stats(spark) -> dict:
@@ -54,8 +49,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("session_age_probe", input_dir=sf_dir, extra_conf=extra)
 
-    for warm in sorted(QUERIES)[:3]:
-        _run(spark, sf_dir, warm)
+    warm_up(spark, sf_dir)
 
     fresh = {p: [_run(spark, sf_dir, p) for _ in range(2)] for p in PROBES}
     s0 = _jvm_stats(spark)
