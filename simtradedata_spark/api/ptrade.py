@@ -117,6 +117,29 @@ def _to_date_str(d) -> str:
     return s[:10]
 
 
+def _as_list(x) -> list:
+    """One code/field or an iterable of them, as a list."""
+    return [x] if isinstance(x, str) else list(x)
+
+
+def _bar_args(frequency, fields):
+    """get_price/get_history argument check: the ``_FREQUENCIES`` value and
+    the field list (default by frequency). Minute frequencies carry
+    ``MINUTE_FIELDS``, resampled ones ``RESAMPLED_FIELDS``; daily bars
+    allow any stored column."""
+    freq = _FREQUENCIES.get(frequency, KeyError)
+    if freq is KeyError:
+        raise ValueError(
+            f"frequency={frequency!r} not supported; one of {sorted(_FREQUENCIES)}"
+        )
+    resampled = isinstance(freq, str)
+    fields = fields or (RESAMPLED_FIELDS if resampled else BAR_FIELDS)
+    if freq is not None:
+        bad = set(fields) - set(RESAMPLED_FIELDS if resampled else MINUTE_FIELDS)
+        if bad:
+            raise ValueError(f"fields {sorted(bad)} unavailable at {frequency}")
+    return freq, fields
+
 
 def _minute_ts() -> Column:
     """bar timestamp = trade_date + bar_time (hhmm) as a real timestamp."""
@@ -131,12 +154,25 @@ def _minute_ts() -> Column:
 
 
 class PTradeDataAPI:
-    """``cache_tables=True`` pins each table in executor memory on first
-    use — the right posture for a backtest loop issuing thousands of point
-    queries over a working set that fits cluster memory (the reference
-    v1.0's LRU query cache, done Spark-style). Partition pruning stops
-    mattering because the scan is already in memory; leave it off for
-    one-shot analytical queries over cold data."""
+    """Two client options, both for backtest loops; leave them off for
+    one-shot analytical queries over cold data.
+
+    ``cache_tables=True`` pins each table in executor memory on first use
+    — the right posture for a loop issuing thousands of point queries over
+    a working set that fits cluster memory (the reference v1.0's LRU query
+    cache, done Spark-style). Partition pruning stops mattering because the
+    scan is already in memory.
+
+    ``point_cache=True`` keeps a client-side pandas copy of each symbol's
+    whole bar history, keyed (symbol, fq, minutes), pulled once through the
+    normal Spark path (fq handling included) and sliced in pandas after
+    that (~1 ms against a ~250 ms Spark job floor; the reference v1.0 is
+    SQLite + LRU with 30 ms point lookups). It serves ``get_price`` and
+    ``get_history`` at daily and minute frequencies for stored bar fields
+    (``BAR_FIELDS`` daily, ``MINUTE_FIELDS`` minute). Resampled
+    frequencies, other daily columns and ``fill='pre'`` stay on Spark.
+    Per-symbol history is a few thousand daily (a few 10k minute) rows;
+    the 100 TB answer remains the vectorized batch path."""
 
     def __init__(
         self,
@@ -146,24 +182,12 @@ class PTradeDataAPI:
     ):
         self.wh = warehouse
         self.spark = warehouse.spark
-        self._table_cache: dict[str, bool] = {}
+        self._table_exists: dict[str, bool] = {}
         self._cache_tables = cache_tables
         self._cached: dict[str, DataFrame] = {}
-        # Client-side per-symbol daily-bar cache for POINT queries: the
-        # reference's v1.0 architecture is exactly this (SQLite + LRU,
-        # 30 ms point lookups); a Spark job floor is ~250 ms however small
-        # the data, so repeated get_price point calls — the backtest event
-        # loop's access pattern — pull each symbol's bounded daily history
-        # ONCE through the normal Spark path (fq handling included) and
-        # slice it in pandas after that (~1 ms). Strictly a client-edge
-        # cache: per-symbol history is a few thousand rows; the 100 TB
-        # answer remains the vectorized batch path.
+        self._trade_days: list[str] | None = None
         self._point_cache = point_cache
-        self._sym_bars: dict[tuple[str, str], pd.DataFrame] = {}
-        # same idea at minute frequency: (symbol, fq, minutes) -> full
-        # minute-bar history (a few 10k rows/symbol) for the minute-level
-        # backtest loop
-        self._sym_minute: dict[tuple[str, str, int], pd.DataFrame] = {}
+        self._point_bars: dict[tuple[str, str, int | None], pd.DataFrame] = {}
 
     def _table(self, name: str) -> DataFrame:
         if not self._cache_tables:
@@ -171,13 +195,11 @@ class PTradeDataAPI:
         if name not in self._cached:
             from simtradedata_spark.functions.caching import protect_new, snapshot
 
-            spark = self.wh.spark if hasattr(self.wh, "spark") else None
             df = self.wh.read(name)
-            spark = spark or df.sparkSession
-            before = snapshot(spark)
+            before = snapshot(self.spark)
             df = df.persist()
             df.count()  # materialize so the pinned blocks can be protected
-            protect_new(spark, before)
+            protect_new(self.spark, before)
             self._cached[name] = df
         return self._cached[name]
 
@@ -230,9 +252,9 @@ class PTradeDataAPI:
         return _date.fromisoformat(days[j])
 
     def _trading_days_cached(self) -> list[str]:
-        if not hasattr(self, "_td_cache"):
-            self._td_cache = self.get_trade_days()
-        return self._td_cache
+        if self._trade_days is None:
+            self._trade_days = self.get_trade_days()
+        return self._trade_days
 
     # -- bars --------------------------------------------------------------
 
@@ -255,20 +277,10 @@ class PTradeDataAPI:
         )
 
     def _has_table(self, name: str) -> bool:
-        cached = self._table_cache.get(name)
-        if cached is None:
-            cached = self._table_cache[name] = self.wh.exists(name)
-        return cached
-
-    @staticmethod
-    def _resampled(bars: DataFrame, freq: str | None) -> DataFrame:
-        if freq is None:
-            return bars
-        from simtradedata_spark.operators.resample import resample_ohlc
-
-        return resample_ohlc(bars, freq).withColumnRenamed(
-            "period_start", "trade_date"
-        )
+        exists = self._table_exists.get(name)
+        if exists is None:
+            exists = self._table_exists[name] = self.wh.exists(name)
+        return exists
 
     def _minute_bars(
         self, securities, fq, start, end, minutes: int
@@ -293,251 +305,8 @@ class PTradeDataAPI:
             mb = rebucket_minute_bars(mb, minutes)
         mb = mb.filter(F.col("symbol").isin(securities))
         if fq in ("pre", "post"):
-            from simtradedata_spark.operators.adjust import adjust_bars
-
             mb = adjust_bars(mb, self._table("adjust_factor"), fq)
         return mb
-
-    def _get_price_minute(
-        self, securities, fq, start, end, fields, count, minutes: int
-    ):
-        """get_price minute mode (spec :521-694). Range mode is
-        date-inclusive; ``count`` mode returns the last ``count`` bars ON
-        OR BEFORE ``end_date`` — unlike daily count mode, the end date's
-        own session is included (minute queries exist to read the current
-        day; completed minutes are final, so there is no exclusive-of-today
-        lookahead hazard). The returned index is a full timestamp
-        (trade_date + bar start time)."""
-        if self._point_cache:
-            frames = [
-                self._point_minute_frame(s, fq, minutes) for s in securities
-            ]
-            out = self._point_slice(
-                frames, fields, start, end, count, end_inclusive=True
-            )
-            return self._shape(out, securities, fields)
-        mb = self._minute_bars(securities, fq, start, end, minutes)
-        pdf = self._minute_pdf(mb, fields, count)
-        return self._shape(pdf, securities, fields)
-
-    def _get_history_minute(
-        self, securities, fields, count, fq, cur, include, is_dict,
-        minutes: int, fill: str = "nan",
-    ):
-        """get_history minute mode: last ``count`` N-minute bars before
-        ``current_date`` (inclusive when ``include``), per symbol, with the
-        same timestamp index as get_price minute mode. ``fill='pre'``
-        densifies to the full session grid over trading days and carries
-        the previous close through suspension gaps (OHLC = carried close,
-        volume/money/n_ticks = 0, vwap null — the daily generator's
-        suspended-bar convention); bars before a symbol's first trade stay
-        null, mirroring the daily forward_fill contract."""
-        bad = set(fields) - set(MINUTE_FIELDS)
-        if bad:
-            raise ValueError(f"fields {sorted(bad)} unavailable at minute frequency")
-        if self._point_cache and fill != "pre":
-            return self._point_history(
-                securities, fields, count, fq, cur, include, is_dict,
-                frame_fn=lambda s: self._point_minute_frame(s, fq, minutes),
-            )
-        mb = self._minute_bars(securities, fq, None, cur, minutes)
-        if fill == "pre":
-            mb = self._densify_minute(mb, securities, minutes)
-        if cur:
-            mb = mb.filter(
-                F.col("trade_date") <= cur if include else F.col("trade_date") < cur
-            )
-        pdf = self._minute_pdf(mb, fields, count)
-        if is_dict:
-            return {
-                s: pdf[pdf.symbol == s].set_index("trade_date")[fields]
-                for s in securities
-            }
-        return self._shape(pdf, securities, fields)
-
-    def get_price(
-        self,
-        security,
-        start_date=None,
-        end_date=None,
-        frequency="1d",
-        fields=None,
-        fq=None,
-        count=None,
-    ):
-        """``ptrade_data_api.py:33-106`` / spec ``:1957-2108``.
-
-        count mode returns the ``count`` bars strictly BEFORE ``end_date``
-        (exclusive-of-today rule, spec ``:1977``); range mode is inclusive.
-
-        Beyond the reference (which warns and falls back to daily,
-        ``ptrade_data_api.py:58-61``): weekly/monthly/quarterly/yearly bars
-        are synthesized from adjusted daily bars via ``resample_ohlc`` (W4),
-        after the range filter so partially-covered edge periods aggregate
-        exactly the requested days. ``count`` then counts periods.
-        """
-        freq = _FREQUENCIES.get(frequency, KeyError)
-        if freq is KeyError:
-            raise ValueError(
-                f"frequency={frequency!r} not supported; one of {sorted(_FREQUENCIES)}"
-            )
-        securities = [security] if isinstance(security, str) else list(security)
-        if isinstance(freq, tuple):
-            fields = fields or BAR_FIELDS
-            bad = set(fields) - set(MINUTE_FIELDS)
-            if bad:
-                raise ValueError(f"fields {sorted(bad)} unavailable at {frequency}")
-            return self._get_price_minute(
-                securities,
-                fq,
-                _to_date_str(start_date) if (start_date and count is None) else None,
-                _to_date_str(end_date) if end_date else None,
-                fields,
-                count,
-                freq[1],
-            )
-        if freq is not None:
-            fields = fields or RESAMPLED_FIELDS
-            bad = set(fields) - set(RESAMPLED_FIELDS)
-            if bad:
-                raise ValueError(f"fields {sorted(bad)} unavailable at {frequency}")
-        else:
-            fields = fields or BAR_FIELDS
-        start = _to_date_str(start_date) if (start_date and count is None) else None
-        end = _to_date_str(end_date) if end_date else None
-        if (
-            self._point_cache
-            and freq is None
-            and set(fields) <= set(BAR_FIELDS)
-        ):
-            return self._point_get_price(securities, fq, start, end, fields, count)
-        bars = self._bars(securities, fq, start, end)
-        if count is not None:
-            if end:
-                # read_range bounded <= end; the exclusive-of-today rule
-                # (spec :1977) still needs the strict inequality
-                bars = bars.filter(F.col("trade_date") < end)
-            bars = self._resampled(bars, freq)
-            w = Window.partitionBy("symbol").orderBy(F.col("trade_date").desc())
-            bars = (
-                bars.withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") <= count)
-                .drop("__rn")
-            )
-        else:
-            bars = self._resampled(bars, freq)
-        pdf = (
-            bars.select("symbol", "trade_date", *fields)
-            .orderBy("trade_date", "symbol")
-            .toPandas()
-        )
-        return self._shape(pdf, securities, fields)
-
-    def get_history(
-        self,
-        count,
-        frequency="1d",
-        field="close",
-        security_list=None,
-        fq=None,
-        include=False,
-        fill="nan",
-        is_dict=False,
-        current_date=None,
-    ):
-        """Spec ``:1774-1955``: last ``count`` bars before ``current_date``
-        (inclusive when ``include``). ``fill='pre'`` forward-fills suspension
-        gaps (W2)."""
-        securities = (
-            [security_list] if isinstance(security_list, str) else list(security_list)
-        )
-        fields = [field] if isinstance(field, str) else list(field)
-        cur = _to_date_str(current_date) if current_date else None
-        freq = _FREQUENCIES.get(frequency, KeyError)
-        if freq is KeyError:
-            raise ValueError(
-                f"frequency={frequency!r} not supported; one of {sorted(_FREQUENCIES)}"
-            )
-        if isinstance(freq, tuple):
-            return self._get_history_minute(
-                securities, fields, count, fq, cur, include, is_dict,
-                freq[1], fill,
-            )
-        # event-loop fast path: daily history from the per-symbol point
-        # cache (fill='pre' needs the Spark forward_fill; resampled
-        # frequencies fold from daily so they stay on the Spark path)
-        if (
-            self._point_cache
-            and freq is None
-            and fill != "pre"
-            and set(fields) <= set(BAR_FIELDS)
-        ):
-            return self._point_history(
-                securities, fields, count, fq, cur, include, is_dict,
-                frame_fn=lambda s: self._point_frame(s, fq),
-            )
-        bars = self._bars(securities, fq, end=cur)
-        if cur:
-            bars = bars.filter(
-                F.col("trade_date") <= cur if include else F.col("trade_date") < cur
-            )
-        bars = self._resampled(bars, freq)
-        if fill == "pre":
-            from simtradedata_spark.operators.align import forward_fill
-
-            bars = forward_fill(bars, list(fields), ["symbol"], ["trade_date"])
-        w = Window.partitionBy("symbol").orderBy(F.col("trade_date").desc())
-        bars = (
-            bars.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= count)
-            .drop("__rn")
-        )
-        pdf = (
-            bars.select("symbol", "trade_date", *fields)
-            .orderBy("trade_date", "symbol")
-            .toPandas()
-        )
-        if is_dict:
-            return {
-                s: pdf[pdf.symbol == s].set_index("trade_date")[fields]
-                for s in securities
-            }
-        return self._shape(pdf, securities, fields)
-
-    def _point_frame(self, symbol: str, fq) -> pd.DataFrame:
-        """One symbol's FULL daily history via the normal Spark path
-        (adjusted-cache / fq join included), pulled once and kept sorted by
-        trade_date with a string date column for slicing."""
-        key = (symbol, fq or "none")
-        pdf = self._sym_bars.get(key)
-        if pdf is None:
-            pdf = (
-                self._bars([symbol], fq, None, None)
-                .select("symbol", "trade_date", *BAR_FIELDS)
-                .orderBy("trade_date")
-                .toPandas()
-            )
-            pdf["__d"] = pdf["trade_date"].astype(str).str[:10]
-            self._sym_bars[key] = pdf
-        return pdf
-
-    def _point_get_price(
-        self,
-        securities: list[str],
-        fq,
-        start: str | None,
-        end: str | None,
-        fields: list[str],
-        count: int | None,
-    ):
-        """Pandas slice of the per-symbol cache, reproducing get_price's
-        daily range/count semantics exactly (count = bars strictly BEFORE
-        end, spec :1977)."""
-        frames = [self._point_frame(sym, fq) for sym in securities]
-        out = self._point_slice(
-            frames, fields, start, end, count, end_inclusive=False
-        )
-        return self._shape(out, securities, fields)
 
     def _densify_minute(self, mb, securities, minutes: int):
         """Full (symbol x trading-day x session-bucket) grid over the data's
@@ -592,91 +361,171 @@ class PTradeDataAPI:
         )
         return mb
 
-    def _point_minute_frame(self, symbol: str, fq, minutes: int) -> pd.DataFrame:
-        """One symbol's FULL minute-bar history via the normal Spark path
-        (materialized 1m table + fold + fq adjustment), pulled once and
-        sliced in pandas afterwards — the minute-frequency twin of
-        ``_point_frame`` for the backtest event loop."""
-        key = (symbol, fq or "none", minutes)
-        pdf = self._sym_minute.get(key)
-        if pdf is None:
-            pdf = (
-                self._minute_bars([symbol], fq, None, None, minutes)
-                .select("symbol", _minute_ts().alias("trade_date"), *MINUTE_FIELDS)
-                .orderBy("trade_date")
-                .toPandas()
+    def _bar_rows(
+        self, securities, fields, fq, freq, start=None, end=None, count=None,
+        end_inclusive=False, fill="nan", *, point=True,
+    ) -> pd.DataFrame:
+        """The one bar path behind get_price and get_history: rows
+        (symbol, trade_date, *fields) ordered by (trade_date, symbol).
+        ``freq`` is a ``_FREQUENCIES`` value; minute rows carry the full
+        bar timestamp in ``trade_date``. Range mode (``count`` None) keeps
+        start <= day <= end. Count mode keeps each symbol's last ``count``
+        bars on or before ``end`` when ``end_inclusive``, strictly before
+        it otherwise. ``fill='pre'`` forward-fills daily bars (W2) and
+        densifies minute bars to the session grid.
+
+        With ``point_cache`` on, daily and minute reads of stored bar
+        fields without ``fill='pre'`` slice the per-symbol pandas history,
+        which is pulled once through the Spark path below (``point=False``).
+        ``fill='pre'`` needs the Spark forward-fill or session grid, and
+        resampled bars fold from daily on Spark, so both stay there."""
+        minutes = freq[1] if isinstance(freq, tuple) else None
+        stored = MINUTE_FIELDS if minutes else BAR_FIELDS
+        if (
+            point and self._point_cache and fill != "pre"
+            and not isinstance(freq, str) and set(fields) <= set(stored)
+        ):
+            parts = []
+            for sym in securities:
+                key = (sym, fq or "none", minutes)
+                pdf = self._point_bars.get(key)
+                if pdf is None:
+                    pdf = self._bar_rows([sym], stored, fq, freq, point=False)
+                    pdf["__d"] = pdf["trade_date"].astype(str).str[:10]
+                    self._point_bars[key] = pdf
+                if count is not None:
+                    if end:
+                        keep = pdf["__d"] <= end if end_inclusive else pdf["__d"] < end
+                        pdf = pdf[keep]
+                    pdf = pdf.tail(count)
+                else:
+                    if start:
+                        pdf = pdf[pdf["__d"] >= start]
+                    if end:
+                        pdf = pdf[pdf["__d"] <= end]
+                parts.append(pdf)
+            return (
+                pd.concat(parts, ignore_index=True)
+                .sort_values(["trade_date", "symbol"], kind="mergesort")
+                .reset_index(drop=True)[["symbol", "trade_date", *fields]]
             )
-            pdf["__d"] = pdf["trade_date"].astype(str).str[:10]
-            self._sym_minute[key] = pdf
-        return pdf
+        if minutes:
+            bars = self._minute_bars(securities, fq, start, end, minutes)
+            if fill == "pre":
+                bars = self._densify_minute(bars, securities, minutes)
+        else:
+            bars = self._bars(securities, fq, start, end)
+        if count is not None and end and not end_inclusive:
+            # the read is bounded <= end; the exclusive rule needs the
+            # strict inequality
+            bars = bars.filter(F.col("trade_date") < end)
+        if isinstance(freq, str):
+            from simtradedata_spark.operators.resample import resample_ohlc
 
-    def _point_history(
-        self, securities, fields, count, fq, cur, include, is_dict, frame_fn
-    ):
-        """get_history served from a per-symbol point cache (daily or
-        minute ``frame_fn``): pandas slice reproducing the Spark path's
-        strictly-before-current_date (or inclusive) count semantics."""
-        frames = [frame_fn(sym) for sym in securities]
-        out = self._point_slice(
-            frames, fields, None, cur, count, end_inclusive=include
-        )
-        if is_dict:
-            return {
-                s: out[out.symbol == s].set_index("trade_date")[fields]
-                for s in securities
-            }
-        return self._shape(out, securities, fields)
+            bars = resample_ohlc(bars, freq).withColumnRenamed(
+                "period_start", "trade_date"
+            )
+        if fill == "pre" and not minutes:
+            from simtradedata_spark.operators.align import forward_fill
 
-    @staticmethod
-    def _minute_pdf(mb: DataFrame, fields, count) -> pd.DataFrame:
-        """Shared minute-mode tail: optional last-N-per-symbol trim, then
-        the timestamp-indexed pandas frame (used by get_price minute and
-        get_history minute)."""
+            bars = forward_fill(bars, list(fields), ["symbol"], ["trade_date"])
         if count is not None:
-            w = Window.partitionBy("symbol").orderBy(
-                F.col("trade_date").desc(), F.col("bar_time").desc()
-            )
-            mb = (
-                mb.withColumn("__rn", F.row_number().over(w))
+            order = [F.col("trade_date").desc()]
+            if minutes:
+                order.append(F.col("bar_time").desc())
+            w = Window.partitionBy("symbol").orderBy(*order)
+            bars = (
+                bars.withColumn("__rn", F.row_number().over(w))
                 .filter(F.col("__rn") <= count)
                 .drop("__rn")
             )
+        ts = _minute_ts().alias("trade_date") if minutes else F.col("trade_date")
         return (
-            mb.select("symbol", _minute_ts().alias("trade_date"), *fields)
+            bars.select("symbol", ts, *fields)
             .orderBy("trade_date", "symbol")
             .toPandas()
         )
 
-    @staticmethod
-    def _point_slice(
-        frames, fields, start, end, count, end_inclusive: bool
-    ) -> pd.DataFrame:
-        """Shared pandas range/count slicing for the point caches. Daily
-        count mode excludes end_date (spec :1977 exclusive-of-today);
-        minute count mode includes it (completed minutes are final) —
-        ``end_inclusive`` is that one semantic difference."""
-        parts = []
-        for pdf in frames:
-            if count is not None:
-                if end:
-                    keep = pdf["__d"] <= end if end_inclusive else pdf["__d"] < end
-                    pdf = pdf[keep]
-                pdf = pdf.tail(count)
-            else:
-                if start:
-                    pdf = pdf[pdf["__d"] >= start]
-                if end:
-                    pdf = pdf[pdf["__d"] <= end]
-            parts.append(pdf)
-        return (
-            pd.concat(parts, ignore_index=True)
-            .sort_values(["trade_date", "symbol"], kind="mergesort")
-            .reset_index(drop=True)[["symbol", "trade_date", *fields]]
+    def get_price(
+        self,
+        security,
+        start_date=None,
+        end_date=None,
+        frequency="1d",
+        fields=None,
+        fq=None,
+        count=None,
+    ):
+        """``ptrade_data_api.py:33-106`` / spec ``:1957-2108``.
+
+        Range mode is date-inclusive. Daily count mode returns the
+        ``count`` bars strictly BEFORE ``end_date`` (exclusive-of-today
+        rule, spec ``:1977``).
+
+        Minute frequencies (spec ``:521-694`` minute mode; the reference
+        warns and falls back to daily, ``ptrade_data_api.py:58-61``) index
+        by full timestamp (trade_date + bar start time). Their count mode
+        returns the last ``count`` bars ON OR BEFORE ``end_date`` — the end
+        date's own session is included (minute queries exist to read the
+        current day; completed minutes are final, so there is no
+        exclusive-of-today lookahead hazard).
+
+        Beyond the reference: weekly/monthly/quarterly/yearly bars are
+        synthesized from adjusted daily bars via ``resample_ohlc`` (W4),
+        after the range filter so partially-covered edge periods aggregate
+        exactly the requested days. ``count`` then counts periods.
+        """
+        freq, fields = _bar_args(frequency, fields)
+        securities = _as_list(security)
+        pdf = self._bar_rows(
+            securities, fields, fq, freq,
+            _to_date_str(start_date) if (start_date and count is None) else None,
+            _to_date_str(end_date) if end_date else None,
+            count, end_inclusive=isinstance(freq, tuple),
         )
+        return self._shape(pdf, securities, fields)
+
+    def get_history(
+        self,
+        count,
+        frequency="1d",
+        field="close",
+        security_list=None,
+        fq=None,
+        include=False,
+        fill="nan",
+        is_dict=False,
+        current_date=None,
+    ):
+        """Spec ``:1774-1955``: last ``count`` bars before ``current_date``
+        (inclusive when ``include``), per symbol. ``fill='pre'`` forward-fills
+        suspension gaps (W2). Minute frequencies use get_price minute mode's
+        timestamp index; there ``fill='pre'`` densifies to the full session
+        grid over trading days and carries the previous close through
+        suspension gaps (OHLC = carried close, volume/money/n_ticks = 0,
+        vwap null — the daily generator's suspended-bar convention); bars
+        before a symbol's first trade stay null, mirroring the daily
+        forward_fill contract."""
+        freq, fields = _bar_args(frequency, _as_list(field))
+        securities = _as_list(security_list)
+        pdf = self._bar_rows(
+            securities, fields, fq, freq, None,
+            _to_date_str(current_date) if current_date else None,
+            count, include, fill,
+        )
+        return self._shape(pdf, securities, fields, is_dict)
 
     @staticmethod
-    def _shape(pdf: pd.DataFrame, securities: list[str], fields: list[str]):
-        """W5 pivots: the three PTrade return shapes."""
+    def _shape(
+        pdf: pd.DataFrame, securities: list[str], fields: list[str], is_dict=False
+    ):
+        """W5 pivots: the three PTrade return shapes, or get_history's
+        ``is_dict`` form {symbol: date × field frame}."""
+        if is_dict:
+            return {
+                s: pdf[pdf.symbol == s].set_index("trade_date")[fields]
+                for s in securities
+            }
         if len(securities) == 1:
             return pdf.set_index("trade_date")[fields]
         if len(fields) == 1:
@@ -716,12 +565,8 @@ class PTradeDataAPI:
 
     def get_stock_info(self, security, field=None) -> pd.DataFrame:
         """``ptrade_data_api.py:158-209``."""
-        securities = [security] if isinstance(security, str) else list(security)
-        fields = (
-            [field]
-            if isinstance(field, str)
-            else list(field or ["stock_name", "listed_date", "de_listed_date"])
-        )
+        securities = _as_list(security)
+        fields = _as_list(field or ["stock_name", "listed_date", "de_listed_date"])
         meta = self._table("stock_metadata").filter(F.col("symbol").isin(securities))
         return meta.select("symbol", *fields).toPandas().set_index("symbol")
 
@@ -748,7 +593,7 @@ class PTradeDataAPI:
 
     def get_stock_name(self, stocks) -> dict:
         """Spec ``:2775-2820``: {code: name}, None for unknown codes."""
-        stocks = [stocks] if isinstance(stocks, str) else list(stocks)
+        stocks = _as_list(stocks)
         rows = (
             self._table("stock_metadata")
             .filter(F.col("symbol").isin(stocks))
@@ -859,7 +704,7 @@ class PTradeDataAPI:
     def get_etf_info(self, etf_code) -> dict:
         """Spec ``:2424-2488``: {etf_code: info dict}; unknown codes omitted
         (异常返回空dict semantics)."""
-        codes = [etf_code] if isinstance(etf_code, str) else list(etf_code)
+        codes = _as_list(etf_code)
         rows = (
             self._table("etf_metadata")
             .filter(F.col("etf_code").isin(codes))
@@ -888,7 +733,7 @@ class PTradeDataAPI:
         """Spec ``:2489-2552``: per-constituent creation-basket terms. The
         basket size (code_num) is a deterministic function of (etf, stock) —
         no basket feed exists; is_open is the real halt status (F6)."""
-        securities = [security] if isinstance(security, str) else list(security)
+        securities = _as_list(security)
         members = set(self.get_etf_stock_list(etf_code, date))
         halts = self.get_stock_status(securities, "HALT", date)
         out = {}
@@ -946,7 +791,7 @@ class PTradeDataAPI:
         ``data_count`` ticks from ``start_pos``, direction 1 = forward from
         the start, 2 = backward from the end; partition-pruned single-day
         scan."""
-        stocks = [stocks] if isinstance(stocks, str) else list(stocks)
+        stocks = _as_list(stocks)
         d = self.get_trading_day(0, date).isoformat()
         data_count = min(int(data_count), 200)
         t = (
@@ -1046,7 +891,7 @@ class PTradeDataAPI:
             }
         )
         frame["symbol"] = pdf.symbol.values
-        syms = [symbols] if isinstance(symbols, str) else list(symbols)
+        syms = _as_list(symbols)
         for s in syms:
             g = frame[frame.symbol == s]
             if len(g):
@@ -1065,7 +910,7 @@ class PTradeDataAPI:
         five gears are synthesized deterministically around last_px at the
         0.01 tick (documented synthetic, like the multimodal decode stubs);
         entrust counts are 0 per the no-L2 rule (spec ``:2576``)."""
-        securities = [security] if isinstance(security, str) else list(security)
+        securities = _as_list(security)
         d = self.get_trading_day(0, date).isoformat()
         bars = (
             self._table_range("bars", d, d)
@@ -1258,7 +1103,7 @@ class PTradeDataAPI:
 
     def get_stock_status(self, stocks, query_type="ST", query_date=None) -> dict:
         """``ptrade_data_api.py:308-422``."""
-        stocks = [stocks] if isinstance(stocks, str) else list(stocks)
+        stocks = _as_list(stocks)
         if query_type not in ("ST", "HALT", "DELISTING"):
             raise ValueError(query_type)
         if query_type == "DELISTING":
@@ -1304,7 +1149,7 @@ class PTradeDataAPI:
         merge_type: 'first' → only original publications (merge_seq=0);
         'latest' → restatements supersede (keep max merge_seq per report).
         """
-        stocks = [stocks] if isinstance(stocks, str) else list(stocks)
+        stocks = _as_list(stocks)
         if table == "valuation":
             return self._valuation_fundamentals(stocks, fields, date)
         if table not in FUNDAMENTAL_TABLES:
@@ -1394,7 +1239,7 @@ class PTradeDataAPI:
         indicators then run over post-adjusted minute bars with a
         timestamp index — the same EMA recursions, one Arrow batch per
         symbol either way."""
-        securities = [security] if isinstance(security, str) else list(security)
+        securities = _as_list(security)
         # only the END bound is safe to push to the scan: EMA state at
         # start_date depends on all earlier bars (warmup), later ones never
         end = _to_date_str(end_date) if end_date else None

@@ -9,10 +9,11 @@ its tail queries by seconds once storage memory filled.
 
 ``release_scratch`` frees every persistent RDD that is NOT registered as a
 session-lifetime cache. Long-lived caches (the memoized synthetic-market
-bars, the PTrade client's pinned tables) call ``protect_current`` right
-after materializing, which snapshots their RDD ids; everything else is, by
-definition, scratch. Harness/bench code calls ``release_scratch`` between
-queries; library callers may call it after a batch job.
+bars, the PTrade client's pinned tables) take a ``snapshot`` before
+materializing and call ``protect_new`` right after, which registers exactly
+the RDD ids they added; everything else is, by definition, scratch.
+Harness/bench code calls ``release_scratch`` between queries; library
+callers may call it after a batch job.
 
 Freeing is safe for ``persist()`` frames (they lazily re-cache on reuse)
 but DESTROYS ``localCheckpoint`` data (lineage is truncated — there is
@@ -101,13 +102,6 @@ def protect_new(spark: SparkSession, before: set[int]) -> None:
     _PROTECTED.update(snapshot(spark) - before)
 
 
-def protect_current(spark: SparkSession) -> None:
-    """Mark every currently-persistent RDD as session-lifetime (called by
-    memo creators immediately after materializing their cache)."""
-    m = _jmap(spark)
-    _PROTECTED.update(int(k) for k in m.keySet().toArray())
-
-
 def release_scratch(spark: SparkSession) -> int:
     """Unpersist all non-protected persistent RDDs; returns how many.
 
@@ -117,13 +111,7 @@ def release_scratch(spark: SparkSession) -> int:
     frames persisted inside the scope, leaving caller persists (and,
     critically, caller ``localCheckpoint`` data, which CANNOT be
     recomputed) untouched."""
-    freed = _drain_scratch_frames()
-    m = _jmap(spark)
-    for k in list(m.keySet().toArray()):
-        if int(k) not in _PROTECTED:
-            m.get(k).unpersist(False)
-            freed += 1
-    return freed
+    return release_new(spark, set())
 
 
 def release_new(

@@ -678,6 +678,11 @@ def test_get_price_minute_bad_inputs(api):
                       frequency="1m", fields=["n_bars"])
     with pytest.raises(ValueError):
         api.get_price("600000.SS", "2022-03-01", "2022-03-02", frequency="7s")
+    # get_history checks fields the same way, naming the frequency
+    for freq, field in (("1w", "pe_ttm"), ("1m", "n_bars")):
+        with pytest.raises(ValueError, match=freq):
+            api.get_history(3, freq, field, "600000.SS",
+                            current_date="2022-03-02")
 
 
 def test_point_cache_minute_parity(warehouse):
@@ -692,11 +697,15 @@ def test_point_cache_minute_parity(warehouse):
         dict(end_date="2022-03-02", count=50, frequency="1m"),
         dict(start_date="2022-03-01", end_date="2022-03-03",
              frequency="30m", fq="post", fields=["close", "vwap"]),
+        # count mode over two symbols: the end date's session is included
+        dict(security=["600000.SS", "000001.SZ"], end_date="2022-03-02",
+             count=50, frequency="1m", fields=["close"]),
     ):
-        a = slow.get_price("600000.SS", **kwargs)
-        b = fast.get_price("600000.SS", **kwargs)
+        security = kwargs.pop("security", "600000.SS")
+        a = slow.get_price(security, **kwargs)
+        b = fast.get_price(security, **kwargs)
         pd.testing.assert_frame_equal(a, b)
-    assert ("600000.SS", "none", 1) in fast._sym_minute
+    assert ("600000.SS", "none", 1) in fast._point_bars
 
 
 def test_get_history_weekly_resample(api):
@@ -757,6 +766,18 @@ def test_point_cache_get_history_parity(warehouse):
         dict(count=9, frequency="30m", field=["close", "vwap"],
              security_list="000001.SZ", current_date="2022-06-15",
              include=True),
+        # the cases that stay on Spark: fill='pre', a resampled frequency,
+        # a daily field outside BAR_FIELDS
+        dict(count=10, field=["close", "volume"],
+             security_list=["600000.SS", "000003.SZ"],
+             current_date="2022-06-15", fill="pre"),
+        dict(count=30, frequency="1m", field="close",
+             security_list="000003.SZ", current_date="2022-06-15",
+             fill="pre"),
+        dict(count=4, frequency="1w", field=["close", "n_bars"],
+             security_list="600000.SS", current_date="2022-06-15"),
+        dict(count=6, field="preclose", security_list="600000.SS",
+             current_date="2022-06-15"),
     ]
     for kw in cases:
         a, b = slow.get_history(**kw), fast.get_history(**kw)

@@ -5,8 +5,9 @@ release that spares session-lifetime memos."""
 from __future__ import annotations
 
 from simtradedata_spark.functions.caching import (
-    protect_current,
+    protect_new,
     scratch_persist,
+    snapshot,
 )
 from simtradedata_spark.queries import QUERIES
 from simtradedata_spark.runner import WARMUP, run_query
@@ -51,9 +52,10 @@ def _persisted(spark) -> set[int]:
 
 
 def test_frees_scratch_keeps_protected_memo(spark):
+    before = snapshot(spark)
     memo = spark.range(100).selectExpr("id * 2 AS v").persist()
     memo.count()
-    protect_current(spark)
+    protect_new(spark, before)
     memo_ids = _persisted(spark)
     made = {}
 
