@@ -131,6 +131,22 @@ def _batch_fingerprint(batch_dir: str) -> tuple[list[str], str]:
     return batch_files, hashlib.md5(repr(files).encode()).hexdigest()[:16]
 
 
+def _ingested(log: str, bid: str) -> bool:
+    """Whether batch ``bid`` is already in the ingest log ``log`` (one
+    committed batch id per line) — the replay guard of both ingest CLIs."""
+    if not os.path.exists(log):
+        return False
+    with open(log) as fh:
+        return bid in fh.read().split()
+
+
+def _log_ingested(log: str, bid: str) -> None:
+    """Commit batch ``bid``: append it to the ingest log ``log``."""
+    os.makedirs(os.path.dirname(log), exist_ok=True)
+    with open(log, "a") as fh:
+        fh.write(bid + "\n")
+
+
 def _cmd_ingest_ticks(args: argparse.Namespace) -> int:
     """Exactly-once daily ingest with the TICKS TABLE as source of truth:
 
@@ -173,8 +189,7 @@ def _cmd_ingest_ticks(args: argparse.Namespace) -> int:
         return 0
     bid = args.batch_id or fingerprint
     log = os.path.join(args.root, "minute_bars", "_ingest_log")
-    committed = set(open(log).read().split()) if os.path.exists(log) else set()
-    if bid in committed:
+    if _ingested(log, bid):
         print(f"batch {bid} already ingested — no-op")
         return 0
 
@@ -205,9 +220,7 @@ def _cmd_ingest_ticks(args: argparse.Namespace) -> int:
         affected, minutes=1, with_state=True
     ).localCheckpoint(eager=True)
     wh.write_partitions_dynamic("minute_bars", merged)
-    os.makedirs(os.path.dirname(log), exist_ok=True)
-    with open(log, "a") as fh:
-        fh.write(bid + "\n")
+    _log_ingested(log, bid)
     print(
         f"batch {bid}: appended {n_new} new ticks "
         f"({lo}..{hi}); rebuilt {merged.count()} minute bars in "
@@ -284,8 +297,7 @@ def _cmd_ingest_vectors(args: argparse.Namespace) -> int:
         return 0
     bid = args.batch_id or fingerprint
     log = os.path.join(args.index, "_ingest_log")
-    committed = set(open(log).read().split()) if os.path.exists(log) else set()
-    if bid in committed:
+    if _ingested(log, bid):
         print(f"batch {bid} already ingested — no-op")
         return 0
     batch = spark.read.parquet(args.vectors)
@@ -296,9 +308,7 @@ def _cmd_ingest_vectors(args: argparse.Namespace) -> int:
     else:
         n = ivf_index_append(spark, args.index, batch)
         print(f"batch {bid}: appended {n} new vectors into {args.index}")
-    os.makedirs(args.index, exist_ok=True)
-    with open(log, "a") as fh:
-        fh.write(bid + "\n")
+    _log_ingested(log, bid)
     return 0
 
 

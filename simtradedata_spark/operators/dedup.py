@@ -351,9 +351,9 @@ def minhash_lsh_candidates(
         df, id_col, text_col, num_hashes, shingle_n, seed, hash_fn=hash_fn
     ).filter(F.col("minhash").isNotNull())
     # Big-input sessions (input bytes past session.BIG_INPUT_BYTES — the
-    # data-derived signal get_spark measures at build time; conf-provenance
-    # fallback for sessions without it, see session.big_input_session) get
-    # the checkpoint + GC nudge, so the ContextCleaner deletes the ~10 GB
+    # data-derived signal get_spark measures at build time, see
+    # session.big_input_session) get the checkpoint + GC nudge, so the
+    # ContextCleaner deletes the ~10 GB
     # shingle-explode shuffle BEFORE the band self-join runs. Small
     # sessions keep the lazy persist: the eager checkpoint job plus a
     # System.gc() on a warm heap cost ~2 s, doubling this query's sf0.1

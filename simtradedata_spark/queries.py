@@ -1808,6 +1808,26 @@ WHERE list_cosine_similarity(CAST(e1.embedding AS DOUBLE[]),
 """
 
 
+def _sql_components(ctes: str, id_col: str, group_col: str) -> str:
+    """Oracle connected components: ``ctes`` must define ``pairs(id_a,
+    id_b)``; the recursive CTE closes the undirected pair graph (transitive
+    reachability) and labels each id with the minimum id it reaches —
+    ``(id_col, group_col, is_canonical)``, one row per id in some pair."""
+    return f"""
+WITH RECURSIVE {ctes}, sym AS (
+  SELECT id_a AS u, id_b AS v FROM pairs
+  UNION
+  SELECT id_b AS u, id_a AS v FROM pairs
+), reach(u, r) AS (
+  SELECT u, u FROM (SELECT DISTINCT u FROM sym)
+  UNION
+  SELECT s.u, r.r FROM sym s JOIN reach r ON s.v = r.u
+)
+SELECT u AS {id_col}, min(r) AS {group_col}, (u = min(r)) AS is_canonical
+FROM reach GROUP BY u
+"""
+
+
 def _sql_kmeans_ctes(k: int, iters: int, dp: int = 6) -> str:
     """DuckDB replay of operators/clustering.py::kmeans — the identical
     rounded Lloyd iteration: seeds = k smallest ids (cell label = seed id),
@@ -1882,24 +1902,16 @@ def q_semantic_dedup(spark, sf_dir):
     return semantic_dedup(emb, k=8, iters=2, threshold=0.45)
 
 
-SQL_SEMANTIC_DEDUP = f"""
-WITH RECURSIVE {_sql_kmeans_ctes(8, 2)},
+SQL_SEMANTIC_DEDUP = _sql_components(
+    f"""{_sql_kmeans_ctes(8, 2)},
 pairs AS (
   SELECT a.vec_id AS id_a, b.vec_id AS id_b
   FROM a2 a JOIN a2 b ON a.cluster = b.cluster AND a.vec_id < b.vec_id
   WHERE round(list_cosine_similarity(a.v, b.v), 6) >= 0.45
-), sym AS (
-  SELECT id_a AS u, id_b AS v FROM pairs
-  UNION
-  SELECT id_b AS u, id_a AS v FROM pairs
-), reach(u, r) AS (
-  SELECT u, u FROM (SELECT DISTINCT u FROM sym)
-  UNION
-  SELECT s.u, r.r FROM sym s JOIN reach r ON s.v = r.u
+)""",
+    "vec_id",
+    "group_id",
 )
-SELECT u AS vec_id, min(r) AS group_id, (u = min(r)) AS is_canonical
-FROM reach GROUP BY u
-"""
 
 
 def q_cluster_balanced_sample(spark, sf_dir):
@@ -2372,22 +2384,11 @@ def q_dedup_clusters(spark, sf_dir):
 
 # The oracle closes the same pair graph with a recursive CTE (transitive
 # reachability → min reachable id). Tiny components keep the closure small.
-SQL_DEDUP_CLUSTERS = f"""
-WITH RECURSIVE pairs AS (
-  SELECT id_a, id_b FROM ({SQL_MINHASH_NEAR_DUPS}) t
-), sym AS (
-  SELECT id_a AS u, id_b AS v FROM pairs
-  UNION
-  SELECT id_b AS u, id_a AS v FROM pairs
-), reach(u, r) AS (
-  SELECT u, u FROM (SELECT DISTINCT u FROM sym)
-  UNION
-  SELECT s.u, r.r FROM sym s JOIN reach r ON s.v = r.u
+SQL_DEDUP_CLUSTERS = _sql_components(
+    f"pairs AS (SELECT id_a, id_b FROM ({SQL_MINHASH_NEAR_DUPS}) t)",
+    "doc_id",
+    "cluster_id",
 )
-SELECT u AS doc_id, min(r) AS cluster_id,
-       (u = min(r)) AS is_canonical
-FROM reach GROUP BY u
-"""
 
 
 def _sql_lsh_ann_top5(dim: int = 64, bits: int = 4, k: int = 5, seed: int = 11) -> str:
@@ -6403,22 +6404,11 @@ def q_embedding_dup_clusters(spark, sf_dir):
     return dedup_clusters(pairs).withColumnRenamed("doc_id", "vec_id")
 
 
-SQL_EMBEDDING_DUP_CLUSTERS = f"""
-WITH RECURSIVE pairs AS (
-  SELECT id_a, id_b FROM ({SQL_COSINE_NEAR_DUPS}) t
-), sym AS (
-  SELECT id_a AS u, id_b AS v FROM pairs
-  UNION
-  SELECT id_b AS u, id_a AS v FROM pairs
-), reach(u, r) AS (
-  SELECT u, u FROM (SELECT DISTINCT u FROM sym)
-  UNION
-  SELECT s.u, r.r FROM sym s JOIN reach r ON s.v = r.u
+SQL_EMBEDDING_DUP_CLUSTERS = _sql_components(
+    f"pairs AS (SELECT id_a, id_b FROM ({SQL_COSINE_NEAR_DUPS}) t)",
+    "vec_id",
+    "cluster_id",
 )
-SELECT u AS vec_id, min(r) AS cluster_id,
-       (u = min(r)) AS is_canonical
-FROM reach GROUP BY u
-"""
 
 
 def q_char_contamination(spark, sf_dir):
@@ -8511,8 +8501,13 @@ _FRONT_WINDOW = [
     #   +13   the stalest-certified entries (all 8 remaining r06-certified
     #         queries — closing the r06 staleness backlog — and 5 r07
     #         ones), so the staleness minimum advances to r07.
+    #   Later swaps (a query the lint taints outside the window replaces
+    #   an untainted entry certified in r11): bloom_decontam in,
+    #   rfm_segments out — the SnapshotWriter store rewrite taints the
+    #   method name ``write``, which reaches bloom_flag_col.
     "adjusted_bars_post",
     "balance_statement_asof",
+    "bloom_decontam",
     "boilerplate_lines",
     "bpe_merges",
     "bpe_token_counts",
@@ -8548,7 +8543,6 @@ _FRONT_WINDOW = [
     "profit_ability_asof",
     "quality_scores",
     "quantized_embeddings",
-    "rfm_segments",
     "semantic_dedup",
     "sessionize_users",
     "sort_msg_industry",

@@ -15,6 +15,9 @@ from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
+# The directory that contains the simtradedata_spark package.
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 # Initial-shuffle-partition sizing target, in bytes of COMPRESSED parquet
 # input per shuffle partition. 16 MB compressed ≈ 60-150 MB of shuffle
 # working set on this engine's heavy families (zstd parquet decompresses
@@ -71,40 +74,22 @@ BIG_INPUT_BYTES = 512 * 1024 * 1024
 def big_input_session(spark: SparkSession) -> bool:
     """True when THIS session's input outgrew the certification scale.
 
-    Primary signal: ``spark.simtradedata.inputBytes`` — the actual
+    The one signal is ``spark.simtradedata.inputBytes`` — the actual
     compressed input size ``get_spark(input_dir=...)`` measured at session
     build time (callers that construct their own session can set the same
     key) — compared against the absolute ``BIG_INPUT_BYTES`` threshold, so
-    the answer keys on DATA SIZE, not conf provenance or core count.
-
-    Fallback (sessions without the key): an EXPLICITLY-set
-    ``spark.sql.shuffle.partitions`` above ``defaultParallelism`` — someone
-    derived a higher-than-cores shuffle ceiling from their input, which
-    only happens past ~16 MB·cores of compressed input. An unset/default
-    conf means nobody derived it, so the session is treated as small: on a
-    third-party session Spark's untouched default ('200' > local cores)
-    must NOT route tiny inputs through the big-input paths (eager
-    checkpoints cost ~2 s each at certification scale while buying
-    nothing). Used by the minhash checkpoint gate (operators/dedup.py);
-    the curation-chain barrier GC nudge (operators/pipeline.py) is
-    deliberately NOT gated on this since r11."""
+    the answer keys on DATA SIZE, not conf provenance or core count. A
+    missing or malformed key means a small session: tiny inputs must NOT
+    route through the big-input paths (eager checkpoints cost ~2 s each at
+    certification scale while buying nothing), and every scale entry point
+    passes ``input_dir``. Used by the minhash checkpoint gate
+    (operators/dedup.py); the curation-chain barrier GC nudge
+    (operators/pipeline.py) is deliberately NOT gated on this since r11."""
     v = spark.conf.get("spark.simtradedata.inputBytes", None)
-    if v is not None:
-        try:
-            return int(v) >= BIG_INPUT_BYTES
-        except ValueError:
-            pass  # malformed — fall through to the conf-provenance signal
-    # Read the BUILD-TIME (static SparkConf) value, not the runtime SQL
-    # conf: builder.getOrCreate() on an existing session APPLIES runtime
-    # SQL confs, so a later get_spark() with a different core count
-    # silently rewrites the runtime shuffle.partitions and would flip this
-    # signal (observed: an 8-core session read back '32' after a reused
-    # 32-core builder). Provenance means what the session was DERIVED with.
-    sc = spark.sparkContext
-    conf = sc.getConf()
-    return conf.contains("spark.sql.shuffle.partitions") and int(
-        conf.get("spark.sql.shuffle.partitions")
-    ) > sc.defaultParallelism
+    try:
+        return int(v) >= BIG_INPUT_BYTES
+    except (TypeError, ValueError):
+        return False
 
 
 def get_spark(
@@ -217,6 +202,12 @@ def get_spark(
         # Python Data Source connectors (sources/pyds.py) push symbol/date
         # predicates into the provider scan.
         .config("spark.sql.python.filterPushdown.enabled", "true")
+        # Python workers (UDFs, Python Data Sources) must import this
+        # package, but they only see the driver's working directory and
+        # env PYTHONPATH — a driver that found the package through sys.path
+        # from another directory would leave them with ModuleNotFoundError.
+        # Spark adds this entry to every worker's PYTHONPATH.
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     if input_bytes is not None:
         # Measured input size for big_input_session — the data-derived

@@ -1,24 +1,24 @@
 """Spark 4 Python Data Source SINK: pointer-committed snapshot writer.
 
 ``df.write.format("simtrade_snapshot").mode(...).save(path)`` — the K-sink
-side of the connector story (SURVEY §2.2), packaging the same commit shape
-``streaming/incremental.py::upsert_batch`` uses (version directory +
-atomic ``_CURRENT`` pointer) behind the engine's writer-commit protocol:
+side of the connector story (SURVEY §2.2): it commits into the snapshot
+store whose format ``streaming/incremental.py`` defines (and whose helpers
+it calls), so ``read_current``, ``list_versions``, ``read_version``,
+``snapshot_diff`` and ``vacuum_versions`` work on sink-written stores.
+The engine's writer-commit protocol maps onto it as:
 
   executors  — ``write(iterator)`` streams Arrow-batched rows into ONE
                uniquely-named parquet part file inside a staging dir and
                reports the file in its ``WriterCommitMessage``;
-  driver     — ``commit(messages)`` publishes a NEW version directory
+  driver     — ``commit(messages)`` publishes the next free version
                containing exactly the files of SUCCESSFUL tasks (plus, in
-               append mode, links to the previous version's files), then
-               atomically repoints ``_CURRENT``; ``abort()`` discards the
-               staging dir.
+               append mode, links to the current version's files), then
+               repoints ``_CURRENT``; ``abort()`` discards the staging dir.
 
-Readers resolve the pointer first (``read_current``), so they never see a
-half-written snapshot; a failed job leaves the table untouched; duplicate
-part files from retried tasks are invisible because commit only moves the
-files named in the success messages — the core of every exactly-once file
-sink (Delta/Iceberg do the same with a manifest instead of a directory).
+A failed job leaves the table untouched; duplicate part files from retried
+tasks are invisible because commit only moves the files named in the
+success messages — the core of every exactly-once file sink (Delta/Iceberg
+do the same with a manifest instead of a directory).
 
 Local-filesystem implementation (os.link/rename); on HDFS/S3 the same
 protocol maps onto the cloud committer APIs.
@@ -32,11 +32,7 @@ import uuid
 from collections.abc import Iterator
 from dataclasses import dataclass
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceWriter,
-    WriterCommitMessage,
-)
+from pyspark.sql.datasource import DataSource, DataSourceWriter, WriterCommitMessage
 
 
 @dataclass
@@ -97,16 +93,17 @@ class SnapshotWriter(DataSourceWriter):
         return _PartFile(filename=name, rows=rows_written)
 
     # -- driver side -------------------------------------------------------
-    def _current_version(self) -> str | None:
-        ptr = os.path.join(self.path, "_CURRENT")
-        if not os.path.exists(ptr):
-            return None
-        with open(ptr) as fh:
-            return fh.read().strip()
-
     def commit(self, messages) -> None:
-        version = f"v{uuid.uuid4().hex[:12]}"
-        final = os.path.join(self.path, version)
+        from simtradedata_spark.streaming.incremental import (
+            _committed_batch,
+            _repoint,
+            _version_dir,
+            list_versions,
+        )
+
+        prev = _committed_batch(self.path)
+        n = max(list_versions(self.path), default=-1) + 1
+        final = _version_dir(self.path, n)
         os.makedirs(final)
         # only files from SUCCESSFUL tasks — retried-task orphans stay in
         # staging and are deleted with it.
@@ -115,19 +112,14 @@ class SnapshotWriter(DataSourceWriter):
                 os.path.join(self.staging, m.filename),
                 os.path.join(final, m.filename),
             )
-        if not self.overwrite:
-            prev = self._current_version()
-            if prev is not None:
-                prev_dir = os.path.join(self.path, prev)
-                for f in os.listdir(prev_dir):
-                    os.link(
-                        os.path.join(prev_dir, f), os.path.join(final, f"prev-{f}")
-                    )
-        ptr = os.path.join(self.path, "_CURRENT")
-        tmp = ptr + ".tmp"
-        with open(tmp, "w") as fh:
-            fh.write(version)
-        os.replace(tmp, ptr)  # atomic repoint = the commit
+        if not self.overwrite and prev >= 0:
+            # data files only: a "prev-" name would unhide Spark's _SUCCESS
+            # and .crc files in a version the streaming folds wrote
+            prev_dir = _version_dir(self.path, prev)
+            for f in os.listdir(prev_dir):
+                if not f.startswith(("_", ".")):
+                    os.link(os.path.join(prev_dir, f), os.path.join(final, f"prev-{f}"))
+        _repoint(self.path, n)
         shutil.rmtree(self.staging, ignore_errors=True)
 
     def abort(self, messages) -> None:

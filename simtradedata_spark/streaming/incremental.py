@@ -12,6 +12,14 @@ tumbling-window aggregation the batch query ``hourly_event_stats`` runs,
 executed as a Structured Streaming query with a watermark (late rows beyond
 the watermark are dropped, N4); ``streaming_dedup`` suppresses at-least-once
 redeliveries with watermark-bounded state (``dropDuplicatesWithinWatermark``).
+
+Snapshot store (shared with the ``simtrade_snapshot`` sink): one
+``v%012d`` directory per committed version plus a ``_CURRENT`` file naming
+the published one. A commit writes a NEW version directory, then atomically
+replaces ``_CURRENT``; readers resolve the pointer first, so they never see
+a half-written version, and older versions stay readable until
+``vacuum_versions`` drops them. Streaming folds number versions by batch id;
+the sink takes the next free number.
 """
 
 from __future__ import annotations
@@ -22,6 +30,28 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from simtradedata_spark.operators.dedup import keep_last
+
+
+def _file_stream(spark: SparkSession, source_dir: str, schema) -> DataFrame:
+    """The parquet file stream every streaming operator reads: one file per
+    micro-batch, so a directory of batch files replays as that many."""
+    return (
+        spark.readStream.format("parquet")
+        .schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .load(source_dir)
+    )
+
+
+def _to_memory(df: DataFrame, query_name: str, mode: str = "append"):
+    """Start ``df`` into the memory sink table ``query_name``; callers read
+    it with ``processAllAvailable()`` + ``spark.sql``."""
+    return (
+        df.writeStream.outputMode(mode)
+        .format("memory")
+        .queryName(query_name)
+        .start()
+    )
 
 
 def incremental_merge(
@@ -65,17 +95,10 @@ def streaming_window_counts(
     query_name: str = "stream_counts",
 ):
     """Tumbling-window event counts over a file stream (N3 cadence model):
-    readStream → watermark → window agg → memory sink. Returns the started
-    query; callers use ``processAllAvailable()`` + ``spark.sql`` to read the
-    result synchronously in tests."""
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(source_dir)
-    )
+    readStream → watermark → window agg → memory sink."""
     agg = (
-        stream.withWatermark("ts", watermark)
+        _file_stream(spark, source_dir, schema)
+        .withWatermark("ts", watermark)
         .groupBy(F.window("ts", window), F.col("event_type"))
         .agg(F.count(F.lit(1)).alias("n_events"), F.sum("value").alias("total_value"))
         .select(
@@ -85,12 +108,7 @@ def streaming_window_counts(
             "total_value",
         )
     )
-    return (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
+    return _to_memory(agg, query_name)
 
 
 def session_agg(df, gap: str = "30 minutes"):
@@ -123,19 +141,8 @@ def streaming_session_counts(
 ):
     """Streaming form of ``session_agg``: readStream → watermark → session
     window → memory sink (append emits sessions closed by the watermark)."""
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(source_dir)
-    )
-    agg = session_agg(stream.withWatermark("ts", watermark), gap)
-    return (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
+    stream = _file_stream(spark, source_dir, schema).withWatermark("ts", watermark)
+    return _to_memory(session_agg(stream, gap), query_name)
 
 
 def minute_bar_agg(ticks, window: str = "1 minute", watermark: str = "2 minutes"):
@@ -174,19 +181,8 @@ def streaming_minute_bars(
 ):
     """minute_bar_agg over a file tick stream → memory sink (same harness
     shape as streaming_window_counts)."""
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(source_dir)
-    )
-    bars = minute_bar_agg(stream, window, watermark)
-    return (
-        bars.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
+    bars = minute_bar_agg(_file_stream(spark, source_dir, schema), window, watermark)
+    return _to_memory(bars, query_name)
 
 
 def streaming_dedup(
@@ -203,46 +199,55 @@ def streaming_dedup(
     bounds the dedup state by the watermark (keys older than it are evicted),
     unlike plain ``dropDuplicates`` on a stream whose state grows forever —
     the only posture that survives an unbounded 100 TB/day feed."""
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(source_dir)
-    )
-    deduped = stream.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
-        keys
-    )
-    return (
-        deduped.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
+    stream = _file_stream(spark, source_dir, schema).withWatermark(ts_col, watermark)
+    return _to_memory(stream.dropDuplicatesWithinWatermark(keys), query_name)
 
 
 # ---------------------------------------------------------------------------
 # N1 streaming form: foreachBatch upsert into a versioned snapshot store
 # ---------------------------------------------------------------------------
 
-def _snapshot_pointer(target: str) -> str:
-    return os.path.join(target, "_CURRENT")
+def _version_dir(target: str, n: int) -> str:
+    """The directory of snapshot version ``n`` — the one place a version
+    is named."""
+    return os.path.join(target, f"v{n:012d}")
+
+
+def _repoint(target: str, n: int) -> None:
+    """Publish version ``n``: atomically replace ``_CURRENT`` (the commit)."""
+    ptr = os.path.join(target, "_CURRENT")
+    with open(ptr + ".tmp", "w") as fh:
+        fh.write(os.path.basename(_version_dir(target, n)))
+    os.replace(ptr + ".tmp", ptr)
+
+
+def _committed_batch(target: str) -> int:
+    """The version ``_CURRENT`` points to (for the streaming folds, the
+    highest batch id already folded in), or -1 before the first commit."""
+    ptr = os.path.join(target, "_CURRENT")
+    if not os.path.exists(ptr):
+        return -1
+    with open(ptr) as fh:
+        return int(fh.read().strip().lstrip("v"))
+
+
+def _publish_version(df: DataFrame, target: str, batch_id: int) -> None:
+    """Write ``df`` as version ``batch_id`` and repoint ``_CURRENT`` to it."""
+    df.write.mode("overwrite").parquet(_version_dir(target, batch_id))
+    _repoint(target, batch_id)
 
 
 def read_current(spark: SparkSession, target: str) -> DataFrame | None:
     """Resolve the _CURRENT pointer and read that snapshot version (None
     before the first commit)."""
-    ptr = _snapshot_pointer(target)
-    if not os.path.exists(ptr):
-        return None
-    with open(ptr) as fh:
-        version = fh.read().strip()
-    return spark.read.parquet(os.path.join(target, version))
+    n = _committed_batch(target)
+    return spark.read.parquet(_version_dir(target, n)) if n >= 0 else None
 
 
 def list_versions(target: str) -> list[int]:
     """Committed snapshot versions, oldest first (the minimal transaction
     log the pointer-commit protocol accumulates — every publish keeps its
-    ``v<batch_id>`` directory)."""
+    version directory)."""
     if not os.path.isdir(target):
         return []
     return sorted(
@@ -331,7 +336,7 @@ def vacuum_versions(
     removed = []
     for v in versions:
         if v not in retained:
-            shutil.rmtree(os.path.join(target, f"v{v:012d}"))
+            shutil.rmtree(_version_dir(target, v))
             removed.append(v)
     now = time.time()
     for d in os.listdir(target) if os.path.isdir(target) else []:
@@ -350,7 +355,51 @@ def read_version(spark: SparkSession, target: str, batch_id: int) -> DataFrame:
     versions = [v for v in list_versions(target) if v <= batch_id]
     if not versions:
         raise ValueError(f"no committed version <= {batch_id} in {target}")
-    return spark.read.parquet(os.path.join(target, f"v{versions[-1]:012d}"))
+    return spark.read.parquet(_version_dir(target, versions[-1]))
+
+
+def _fold(batch_df: DataFrame, batch_id: int, target: str, first, merge) -> None:
+    """One micro-batch commit: ``first(batch)`` before the first commit,
+    else ``merge(current, batch)``, published as version ``batch_id`` — the
+    commit shape Delta's MERGE performs with file-level transactions; a
+    failed batch leaves the pointer (and thus the table) intact.
+
+    A batch id at or below the committed pointer is skipped: the standard
+    foreachBatch exactly-once guard. Spark replays a failed batch with the
+    SAME id and the pointer only advances after a durable publish, so a
+    fold (rollups, OHLC bars) never double-counts; an upsert's key merge is
+    idempotent anyway."""
+    committed = _committed_batch(target)
+    if batch_id <= committed:
+        return
+    if committed < 0:
+        state = first(batch_df)
+    else:
+        spark = batch_df.sparkSession
+        state = merge(spark.read.parquet(_version_dir(target, committed)), batch_df)
+    _publish_version(state, target, batch_id)
+
+
+def _fold_stream(
+    spark, source_dir: str, schema, query_name: str, checkpoint, fold,
+    available_now: bool = False,
+):
+    """Start the file stream at ``source_dir`` with ``fold(df, batch_id)``
+    run on every micro-batch. ``checkpoint`` makes it restartable: a
+    restarted query resumes from the committed source offsets with
+    CONTINUING batch ids, so folded files are never re-read and the version
+    log stays monotone. ``available_now`` drains the files present, still
+    one per micro-batch, then stops."""
+    writer = (
+        _file_stream(spark, source_dir, schema)
+        .writeStream.foreachBatch(fold)
+        .queryName(query_name)
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    if checkpoint:
+        writer = writer.option("checkpointLocation", checkpoint)
+    return writer.start()
 
 
 def upsert_batch(
@@ -360,40 +409,14 @@ def upsert_batch(
     keys: list[str],
     order_by=None,
 ) -> None:
-    """One micro-batch commit: merge into the current snapshot
-    (last-writer-wins on ``keys``, J4) and publish a NEW snapshot directory,
-    then atomically repoint ``_CURRENT`` — a minimal transaction log, the
-    same commit shape Delta's MERGE performs with file-level transactions.
-    Readers resolve the pointer first, so they never observe a half-written
-    snapshot; failed batches leave the pointer (and thus the table) intact.
-    """
-    spark = batch_df.sparkSession
-    existing = read_current(spark, target)
-    if existing is None:
-        # still dedup within the first batch itself
-        merged = incremental_merge(batch_df.limit(0), batch_df, keys, order_by)
-    else:
-        merged = incremental_merge(existing, batch_df, keys, order_by)
-    _publish_version(merged, target, batch_id)
-
-
-def _publish_version(df: DataFrame, target: str, batch_id: int) -> None:
-    """Write a new snapshot dir and atomically repoint ``_CURRENT``."""
-    version = f"v{batch_id:012d}"
-    df.write.mode("overwrite").parquet(os.path.join(target, version))
-    tmp = _snapshot_pointer(target) + ".tmp"
-    with open(tmp, "w") as fh:
-        fh.write(version)
-    os.replace(tmp, _snapshot_pointer(target))
-
-
-def _committed_batch(target: str) -> int:
-    """Highest batch id already folded into the published snapshot, or -1."""
-    ptr = _snapshot_pointer(target)
-    if not os.path.exists(ptr):
-        return -1
-    with open(ptr) as fh:
-        return int(fh.read().strip().lstrip("v"))
+    """One micro-batch upsert: last-writer-wins merge on ``keys`` (J4) into
+    the current snapshot, published as a new version (``_fold``). The first
+    batch is still deduplicated within itself."""
+    _fold(
+        batch_df, batch_id, target,
+        lambda b: incremental_merge(b.limit(0), b, keys, order_by),
+        lambda cur, b: incremental_merge(cur, b, keys, order_by),
+    )
 
 
 def streaming_upsert(
@@ -410,24 +433,12 @@ def streaming_upsert(
     store via ``foreachBatch`` (exactly the Structured-Streaming + MERGE
     pattern SURVEY §2.10 calls for; with a Delta/Iceberg jar the body of
     ``upsert_batch`` becomes a real MERGE INTO and the pointer goes away).
-
-    Pass ``checkpoint`` for restartability: a restarted query resumes from
-    the committed source offsets with CONTINUING batch ids, so already-
-    folded files are never re-read and the snapshot version log stays
-    monotone (tested end-to-end across a stop/restart).
-    """
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(source_dir)
+    Pass ``checkpoint`` for restartability (tested end-to-end across a
+    stop/restart)."""
+    return _fold_stream(
+        spark, source_dir, schema, query_name, checkpoint,
+        lambda df, bid: upsert_batch(df, bid, target, keys, order_by),
     )
-    writer = stream.writeStream.foreachBatch(
-        lambda df, bid: upsert_batch(df, bid, target, keys, order_by)
-    ).queryName(query_name)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
 
 
 def rollup_batch(
@@ -441,24 +452,15 @@ def rollup_batch(
 ) -> None:
     """Fold one micro-batch into the continuous-aggregate state
     (operators/hypertable): union-merge the mergeable (sum, cnt, min, max)
-    state with the batch's delta rollup, publish, repoint.
-
-    Unlike ``upsert_batch`` (idempotent by key merge), a FOLD replayed
-    after a crash would double-count — so a batch id at or below the
-    committed pointer is skipped, which is the standard foreachBatch
-    exactly-once guard: Spark replays a failed batch with the SAME id,
-    and the pointer only advances after a durable publish."""
+    state with the batch's delta rollup, publish, repoint. A replayed batch
+    id is skipped (``_fold``) — a re-applied fold would double-count."""
     from simtradedata_spark.operators.hypertable import refresh_rollup, time_rollup
 
-    if batch_id <= _committed_batch(target):
-        return
-    spark = batch_df.sparkSession
-    existing = read_current(spark, target)
-    if existing is None:
-        state = time_rollup(batch_df, keys, ts_col, value_col, width)
-    else:
-        state = refresh_rollup(existing, batch_df, keys, ts_col, value_col, width)
-    _publish_version(state, target, batch_id)
+    _fold(
+        batch_df, batch_id, target,
+        lambda b: time_rollup(b, keys, ts_col, value_col, width),
+        lambda cur, b: refresh_rollup(cur, b, keys, ts_col, value_col, width),
+    )
 
 
 def streaming_rollup(
@@ -478,20 +480,10 @@ def streaming_rollup(
     (keys, bucket)) through ``rollup_read`` — O(buckets), never the raw
     stream history; the batch and streaming paths share the identical
     merge code, so stream ≡ batch by construction (and by test)."""
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(source_dir)
+    return _fold_stream(
+        spark, source_dir, schema, query_name, checkpoint,
+        lambda df, bid: rollup_batch(df, bid, target, keys, ts_col, value_col, width),
     )
-    writer = stream.writeStream.foreachBatch(
-        lambda df, bid: rollup_batch(
-            df, bid, target, keys, ts_col, value_col, width
-        )
-    ).queryName(query_name)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
 
 
 def minute_bar_rollup_batch(
@@ -500,22 +492,17 @@ def minute_bar_rollup_batch(
     """Fold one micro-batch of TICKS into the stateful minute-bar table
     (operators/resample.py::refresh_time_bars) — the intraday-bar form of
     ``rollup_batch``, with the same replay guard: OHLC folds through the
-    order state, so a replayed batch would corrupt open/close sums; a
-    batch id at or below the committed pointer is skipped."""
+    order state, so a replayed batch would corrupt open/close sums."""
     from simtradedata_spark.operators.resample import (
         refresh_time_bars,
         time_bars_from_ticks,
     )
 
-    if batch_id <= _committed_batch(target):
-        return
-    spark = batch_df.sparkSession
-    existing = read_current(spark, target)
-    if existing is None:
-        state = time_bars_from_ticks(batch_df, minutes, with_state=True)
-    else:
-        state = refresh_time_bars(existing, batch_df, minutes)
-    _publish_version(state, target, batch_id)
+    _fold(
+        batch_df, batch_id, target,
+        lambda b: time_bars_from_ticks(b, minutes, with_state=True),
+        lambda cur, b: refresh_time_bars(cur, b, minutes),
+    )
 
 
 def streaming_minute_rollup(
@@ -535,23 +522,14 @@ def streaming_minute_rollup(
     construction and by test.
 
     ``available_now=True`` processes everything currently in the source
-    (still micro-batched by maxFilesPerTrigger, so the fold path is
-    genuinely exercised) and then terminates — the one-shot CLI form
-    (``python -m simtradedata_spark stream-ticks``)."""
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(source_dir)
+    (still micro-batched, so the fold path is genuinely exercised) and then
+    terminates — the one-shot CLI form (``python -m simtradedata_spark
+    stream-ticks``)."""
+    return _fold_stream(
+        spark, source_dir, schema, query_name, checkpoint,
+        lambda df, bid: minute_bar_rollup_batch(df, bid, target, minutes),
+        available_now,
     )
-    writer = stream.writeStream.foreachBatch(
-        lambda df, bid: minute_bar_rollup_batch(df, bid, target, minutes)
-    ).queryName(query_name)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
 
 
 def streaming_count_min(
@@ -580,16 +558,6 @@ def streaming_count_min(
     tests/test_stateful_streaming.py."""
     from simtradedata_spark.operators.sketches import count_min_sketch
 
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(source_dir)
-    )
+    stream = _file_stream(spark, source_dir, schema)
     sk = count_min_sketch(stream, col, depth=depth, width=width, hash_fn=hash_fn)
-    return (
-        sk.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
+    return _to_memory(sk, query_name, "complete")

@@ -19,6 +19,8 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from simtradedata_spark.streaming.incremental import _file_stream, _to_memory
+
 
 def interval_join(
     left: DataFrame,
@@ -70,22 +72,7 @@ def streaming_interval_join(
 ):
     """interval_join over two file streams → memory sink (same harness shape
     as streaming_minute_bars)."""
-    l = (
-        spark.readStream.format("parquet")
-        .schema(left_schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(left_dir)
-    )
-    r = (
-        spark.readStream.format("parquet")
-        .schema(right_schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(right_dir)
-    )
+    l = _file_stream(spark, left_dir, left_schema)
+    r = _file_stream(spark, right_dir, right_schema)
     out = interval_join(l, r, keys, left_ts, right_ts, lookback, watermark, how)
-    return (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
+    return _to_memory(out, query_name)

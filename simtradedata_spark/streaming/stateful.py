@@ -18,6 +18,8 @@ import pandas as pd
 
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from simtradedata_spark.streaming.incremental import _file_stream, _to_memory
+
 OUTPUT_SCHEMA = "symbol string, n_rows long, cum_volume double, vwap double"
 STATE_SCHEMA = "cum_money double, cum_volume double, n_rows long"
 
@@ -53,12 +55,7 @@ def streaming_vwap(
     query_name: str = "vwap_state",
 ):
     """File-stream → per-symbol stateful running VWAP → memory sink."""
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(source_dir)
-    )
+    stream = _file_stream(spark, source_dir, schema)
     out = stream.groupBy("symbol").applyInPandasWithState(
         _update_vwap,
         OUTPUT_SCHEMA,
@@ -66,9 +63,4 @@ def streaming_vwap(
         "update",
         GroupStateTimeout.NoTimeout,
     )
-    return (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
+    return _to_memory(out, query_name, "update")

@@ -29,6 +29,8 @@ import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
 
+from simtradedata_spark.streaming.incremental import _file_stream, _to_memory
+
 OUT_SCHEMA = "user_id bigint, n_events bigint, total_value double, max_value double"
 
 
@@ -77,21 +79,11 @@ def streaming_running_stats(
         "spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     )
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(source_dir)
-    )
+    stream = _file_stream(spark, source_dir, schema)
     out = stream.groupBy("user_id").transformWithStateInPandas(
         RunningStatsProcessor(),
         outputStructType=OUT_SCHEMA,
         outputMode="Update",
         timeMode="None",
     )
-    return (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
+    return _to_memory(out, query_name, "update")

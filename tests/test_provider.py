@@ -151,11 +151,19 @@ def test_python_datasource_filter_pushdown_prunes(spark):
 def test_snapshot_sink_pointer_commit(spark, tmp_path):
     """Python Data Source writer: overwrite publishes a new version and
     atomically repoints _CURRENT; append links the previous version in;
-    readers through read_current never see staging state."""
+    readers through read_current never see staging state. The versions are
+    the snapshot store's own, so listing, time travel and vacuum work on a
+    sink-written store."""
     from pyspark.sql import functions as F
 
     from simtradedata_spark.sources.snapshot_sink import SnapshotDataSource
-    from simtradedata_spark.streaming.incremental import read_current
+    from simtradedata_spark.streaming.incremental import (
+        list_versions,
+        read_current,
+        read_version,
+        upsert_batch,
+        vacuum_versions,
+    )
 
     spark.dataSource.register(SnapshotDataSource)
     target = str(tmp_path / "snap")
@@ -180,6 +188,21 @@ def test_snapshot_sink_pointer_commit(spark, tmp_path):
     import os
 
     assert not [p for p in os.listdir(target) if p.startswith("_staging")]
+
+    # every sink write is a listed version, in commit order
+    assert list_versions(target) == [0, 1, 2]
+    rows = lambda df: sorted(tuple(r) for r in df.collect())
+    assert rows(read_version(spark, target, 0)) == rows(d1)
+    assert vacuum_versions(target, keep=1) == [0, 1]
+    assert list_versions(target) == [2]
+    assert read_current(spark, target).count() == 7
+
+    # an append onto a version a streaming fold wrote links only its data
+    # files, not Spark's _SUCCESS and .crc side files
+    upsert_batch(d1, 3, target, ["id"])
+    d2.write.format("simtrade_snapshot").mode("append").save(target)
+    assert list_versions(target) == [2, 3, 4]
+    assert read_current(spark, target).count() == 150
 
 
 def test_python_datasource_streams_one_day_per_batch(spark, tmp_path):

@@ -5,6 +5,9 @@ env opt-in), extra_conf overriding it, and the status-store bounds."""
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
 import warnings
 
 from simtradedata_spark.session import (
@@ -17,6 +20,7 @@ from simtradedata_spark.session import (
 )
 
 MB = 1024 * 1024
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_derivation_floors_at_cores_for_small_inputs():
@@ -76,17 +80,15 @@ def test_big_input_session_keys_on_input_bytes(spark):
         # the 10x replica ~175 MB)
         spark.conf.set(key, str(175 * MB))
         assert big_input_session(spark) is False
-        # malformed value falls back to the conf-provenance signal, which
-        # is False here (explicit partitions == cores)
+        # a malformed value means a small session
         spark.conf.set(key, "garbage")
         assert big_input_session(spark) is False
     finally:
         spark.conf.unset(key)
 
 
-def test_big_input_session_conf_fallback_without_input_bytes(spark):
-    # no inputBytes key: the explicit shuffle.partitions-vs-cores fallback
-    # (this session: 8 == 8 -> small)
+def test_big_input_session_small_without_input_bytes(spark):
+    # no inputBytes key: a small session, whatever the shuffle partitions
     assert spark.conf.get("spark.simtradedata.inputBytes", None) is None
     assert big_input_session(spark) is False
 
@@ -131,3 +133,30 @@ def test_extra_conf_shuffle_partitions_no_false_reuse_warning(spark):
         assert not [w for w in caught if "reusing" in str(w.message)]
     finally:
         spark.conf.set(key, before)
+
+
+def test_workers_import_package_from_any_working_directory(tmp_path):
+    """A driver started outside the repo that finds the package only via
+    sys.path still runs Python-worker code: a simtrade_snapshot write runs
+    SnapshotWriter.write in a worker, which must import the package."""
+    target = str(tmp_path / "snap")
+    script = f"""
+import sys
+sys.path.insert(0, {ROOT!r})
+from simtradedata_spark.session import get_spark
+from simtradedata_spark.sources.snapshot_sink import SnapshotDataSource
+from simtradedata_spark.streaming.incremental import read_current
+
+spark = get_spark("session-test-cwd", cpus=1)
+spark.dataSource.register(SnapshotDataSource)
+spark.range(5).write.format("simtrade_snapshot").mode("overwrite").save({target!r})
+print("rows", read_current(spark, {target!r}).count())
+"""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    proc = subprocess.run(
+        [sys.executable, "-c", script],
+        capture_output=True, text=True, env=env, timeout=300, cwd=tmp_path,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    assert "rows 5" in proc.stdout
