@@ -32,7 +32,11 @@ import uuid
 from collections.abc import Iterator
 from dataclasses import dataclass
 
-from pyspark.sql.datasource import DataSource, DataSourceWriter, WriterCommitMessage
+from pyspark.sql.datasource import (
+    DataSource,
+    DataSourceWriter,
+    WriterCommitMessage,
+)
 
 
 @dataclass

@@ -369,14 +369,10 @@ def _fold(batch_df: DataFrame, batch_id: int, target: str, first, merge) -> None
     SAME id and the pointer only advances after a durable publish, so a
     fold (rollups, OHLC bars) never double-counts; an upsert's key merge is
     idempotent anyway."""
-    committed = _committed_batch(target)
-    if batch_id <= committed:
+    if batch_id <= _committed_batch(target):
         return
-    if committed < 0:
-        state = first(batch_df)
-    else:
-        spark = batch_df.sparkSession
-        state = merge(spark.read.parquet(_version_dir(target, committed)), batch_df)
+    current = read_current(batch_df.sparkSession, target)
+    state = first(batch_df) if current is None else merge(current, batch_df)
     _publish_version(state, target, batch_id)
 
 
