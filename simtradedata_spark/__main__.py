@@ -4,7 +4,7 @@
 exist). Subcommands:
 
   python -m simtradedata_spark build --root PATH [--symbols N] [--start D]
-      [--end D] [--bucketed]      # generate + persist the full warehouse
+      [--end D] [--zorder]        # generate + persist the full warehouse
   python -m simtradedata_spark bench [--sf-dir DIR]
       # run every registered query, print the one-line bench JSON
   python -m simtradedata_spark check [--sf-dir DIR] [QUERY ...]
@@ -44,7 +44,6 @@ def _cmd_build(args: argparse.Namespace) -> int:
     from simtradedata_spark.session import get_spark
     from simtradedata_spark.sources.synthetic import SyntheticMarket
     from simtradedata_spark.sources.tables import (
-        BucketedWarehouse,
         Warehouse,
         ZOrderWarehouse,
         build_warehouse,
@@ -54,12 +53,7 @@ def _cmd_build(args: argparse.Namespace) -> int:
     market = SyntheticMarket(
         spark, n_symbols=args.symbols, start=args.start, end=args.end
     )
-    if args.bucketed:
-        wh = BucketedWarehouse(spark, args.root)
-    elif args.zorder:
-        wh = ZOrderWarehouse(spark, args.root)
-    else:
-        wh = Warehouse(spark, args.root)
+    wh = (ZOrderWarehouse if args.zorder else Warehouse)(spark, args.root)
     build_warehouse(spark, args.root, market=market, warehouse=wh)
     rows = wh.read("bars").count()
     print(f"warehouse built at {args.root}: tables={wh.tables()} bars_rows={rows}")
@@ -166,7 +160,7 @@ def _cmd_ingest_ticks(args: argparse.Namespace) -> int:
          minute_bars table bootstraps for free. Partition-selective
          dynamic overwrite rewrites only those months — a daily batch
          rewrites ≤31 days of bars, not a year (ticks and minute_bars are
-         month-grain partitioned, sources/tables.py::MONTH_GRAIN, so the
+         month-grain partitioned, sources/tables.py::GRAIN, so the
          rebuild's tick read prunes to the same months it rewrites).
       4. commit the batch id.
 
@@ -219,7 +213,7 @@ def _cmd_ingest_ticks(args: argparse.Namespace) -> int:
     merged = time_bars_from_ticks(
         affected, minutes=1, with_state=True
     ).localCheckpoint(eager=True)
-    wh.write_partitions_dynamic("minute_bars", merged)
+    wh.write("minute_bars", merged, dynamic=True)
     _log_ingested(log, bid)
     print(
         f"batch {bid}: appended {n_new} new ticks "
@@ -360,7 +354,6 @@ def main(argv: list[str] | None = None) -> int:
     b.add_argument("--symbols", type=int, default=20)
     b.add_argument("--start", default="2022-01-03")
     b.add_argument("--end", default="2023-12-29")
-    b.add_argument("--bucketed", action="store_true")
     b.add_argument("--zorder", action="store_true")
     b.set_defaults(fn=_cmd_build)
 

@@ -14,7 +14,7 @@ row (``unified_fetcher.py:20-34``). Two pushdowns make it scan-efficient:
     asked for fewer days (predicate pushdown to the RPC).
 
 The bundled row generator is the deterministic synthetic provider (pure
-python — executors only need this module), seeded per (symbol, day): the
+python — executors only need this package), seeded per (symbol, day): the
 same (symbol, date) always yields the same row, on any partitioning.
 """
 
@@ -38,12 +38,7 @@ from pyspark.sql.datasource import (
     SimpleDataSourceStreamReader,
 )
 
-UNIFIED_SCHEMA = (
-    "symbol string, trade_date date, open double, high double, low double, "
-    "close double, volume double, money double, pe_ttm double, pb double, "
-    "ps_ttm double, pcf double, turnover_rate double, is_st int, "
-    "trade_status int"
-)
+from simtradedata_spark.sources.provider import UNIFIED_SCHEMA
 
 
 def _u01(key: str) -> float:

@@ -1,11 +1,14 @@
 """Warehouse: tall partitioned parquet tables replacing the reference's
 per-symbol HDF5 keys (``h5_writer.py`` K1-K6, SURVEY §2.2).
 
-Layout decisions (designed for 100 TB, exercised locally):
-  - ``bars``/``valuation``/``adjust_factor``/``stock_status`` are partitioned
-    by ``trade_year`` (derived) — date-range queries prune whole directories;
-    within a partition, files are written sorted by (symbol, trade_date) so
-    min/max parquet stats make symbol predicates effective too.
+Layout decisions (designed for 100 TB, exercised locally), each stated once:
+  - ``GRAIN`` maps every fact table to its partition column, derived from
+    ``trade_date`` by ``_grain_value``. Dailies (``bars``, ``valuation``,
+    ``adjust_factor``, ``stock_status`` and the materialized ``bars_pre``/
+    ``bars_post``) are partitioned by ``trade_year`` — date-range queries
+    prune whole directories; within a partition, files are written sorted
+    by (symbol, trade_date) so min/max parquet stats make symbol
+    predicates effective too.
   - ``ticks``/``minute_bars`` are partitioned by ``trade_month`` (derived
     int yyyymm): intraday tables are ~2 orders of magnitude denser per day
     than the dailies, and the incremental ingest rebuilds whole partitions —
@@ -13,38 +16,81 @@ Layout decisions (designed for 100 TB, exercised locally):
     (~365× write amplification at 100 TB); at month grain the dynamic
     overwrite touches only the batch's own months (≤31× worst case, 1-day
     granularity costs a 12× deeper dir tree for no extra pruning win).
-  - dimension tables (metadata, calendar, exrights, fundamentals,
-    constituents) are single unpartitioned tables — they are broadcast-sized
-    at any realistic scale.
+  - every other table (metadata, calendar, exrights, fundamentals,
+    constituents) is a single unpartitioned table — broadcast-sized at any
+    realistic scale.
+  - directory replacement (``compact``, ``regrain``) is one crash-safe
+    rename-aside swap (``_swap``) over one staging name (``_staging``),
+    and one sweep (``_sweep``) finishes or drops what a crash left behind.
   - ``compression`` inherits the session's zstd default (K1's blosc-9 analog).
 """
 
 from __future__ import annotations
 
+import math
 import os
+import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-PARTITIONED = {
-    "bars",
-    "valuation",
-    "adjust_factor",
-    "stock_status",
-    "ticks",
-    "minute_bars",
+GRAIN = {
+    "bars": "trade_year",
+    "bars_pre": "trade_year",
+    "bars_post": "trade_year",
+    "valuation": "trade_year",
+    "adjust_factor": "trade_year",
+    "stock_status": "trade_year",
+    "ticks": "trade_month",
+    "minute_bars": "trade_month",
 }
-# intraday subset of PARTITIONED: month-grain (int yyyymm) partition column
-MONTH_GRAIN = {"ticks", "minute_bars"}
 _PART_COLS = ("trade_year", "trade_month")
-DIMENSION = {
-    "trade_calendar",
-    "exrights",
-    "fundamentals",
-    "stock_metadata",
-    "index_constituents",
-    "benchmark",
-}
+
+
+def _grain_value(part_col: str, date: Column | str = "trade_date") -> Column:
+    """The ``part_col`` partition value of ``date``: its year, or the int
+    yyyymm of its month."""
+    year = F.year(date)
+    return year if part_col == "trade_year" else year * 100 + F.month(date)
+
+
+def _staging(live: str, op: str, kind: str = "tmp") -> str:
+    """Hidden sibling ``.<name>.<op>-<kind>`` of the dir ``live``:
+    dot-prefixed, so Spark's file listing never parses it as data or as a
+    partition value."""
+    name = f".{os.path.basename(live)}.{op}-{kind}"
+    return os.path.join(os.path.dirname(live), name)
+
+
+def _swap(live: str, op: str) -> None:
+    """Replace ``live`` with its fully written staging dir by renaming the
+    old dir aside first, so there is never a moment when the data is simply
+    gone. A crash between the renames leaves the staging dir and no live
+    dir, which ``_sweep`` finishes on the next run; a crash after them
+    leaves only the trash dir, which ``_sweep`` drops."""
+    trash = _staging(live, op, "trash")
+    os.rename(live, trash)
+    os.rename(_staging(live, op), live)
+    shutil.rmtree(trash)
+
+
+def _sweep(parent: str, prefix: str = ".") -> None:
+    """Clean up after a crashed ``_swap`` among ``parent``'s staging dirs
+    whose names start with ``prefix``: a ``-trash`` dir is a superseded
+    original (drop it); a ``-tmp`` dir without its live dir is a finished
+    replacement whose swap never happened (move it in); a ``-tmp`` dir
+    beside its live dir is a write cut short (drop it)."""
+    if not os.path.isdir(parent):
+        return
+    for d in os.listdir(parent):
+        name, _, tag = d[1:].rpartition(".")
+        p, live = os.path.join(parent, d), os.path.join(parent, name)
+        if not (d.startswith(prefix) and name and os.path.isdir(p)):
+            continue
+        if tag.endswith("-trash") or (tag.endswith("-tmp") and os.path.isdir(live)):
+            shutil.rmtree(p)
+        elif tag.endswith("-tmp"):
+            os.rename(p, live)
 
 
 class Warehouse:
@@ -62,12 +108,22 @@ class Warehouse:
         mode: str = "overwrite",
         dynamic: bool = False,
     ) -> None:
-        """K1-K5 sink: partitioned fact tables get a derived trade_year
-        (daily) or trade_month (intraday) partition column + in-file sort;
-        dims are written as-is. ``dynamic=True`` switches the partitioned
-        branch to dynamic partition overwrite (only the partitions present
-        in ``df`` are replaced) — one copy of the layout logic for both
-        writers."""
+        """K1-K5 sink: a ``GRAIN`` fact table gets its derived partition
+        column and the ``_cluster`` file layout; any other table is written
+        as-is. ``dynamic=True`` replaces only the partitions present in
+        ``df`` and leaves every other partition's files untouched — the
+        incremental-ingest write: a daily tick batch rewrites one month of
+        minute bars, not the table."""
+        self._write_to(self.path(table), table, df, mode, dynamic)
+
+    def _write_to(
+        self,
+        path: str,
+        table: str,
+        df: DataFrame,
+        mode: str = "overwrite",
+        dynamic: bool = False,
+    ) -> None:
         if dynamic and mode != "overwrite":
             # dynamic overwrite IS an overwrite of the touched partitions;
             # silently coercing e.g. mode="append" would hand the caller
@@ -75,40 +131,28 @@ class Warehouse:
             raise ValueError(
                 f"dynamic=True requires mode='overwrite' (got mode={mode!r})"
             )
-        if table in PARTITIONED and "trade_date" in df.columns:
-            if table in MONTH_GRAIN:
-                part_col = "trade_month"
-                part_val = F.year("trade_date") * 100 + F.month("trade_date")
-            else:
-                part_col = "trade_year"
-                part_val = F.year("trade_date")
-            if mode == "append" or dynamic:
-                # a full overwrite replaces the table dir wholesale, but an
-                # append/dynamic write LANDS BESIDE existing partition dirs
-                # — mixing grains there breaks partition discovery on the
-                # next read ("Conflicting partition column names")
-                self._check_grain(table, part_col)
-            w = (
-                df.withColumn(part_col, part_val)
-                .repartition(part_col)
-                .sortWithinPartitions("symbol", "trade_date")
-                .write.mode(mode)
-            )
-            if dynamic:
-                w = w.option("partitionOverwriteMode", "dynamic")
-            w.partitionBy(part_col).parquet(self.path(table))
-        else:
-            df.write.mode(mode).parquet(self.path(table))
+        part_col = GRAIN.get(table)
+        if part_col is None or "trade_date" not in df.columns:
+            df.write.mode(mode).parquet(path)
+            return
+        if mode == "append" or dynamic:
+            # a full overwrite replaces the table dir wholesale, but an
+            # append/dynamic write LANDS BESIDE existing partition dirs
+            # — mixing grains there breaks partition discovery on the
+            # next read ("Conflicting partition column names")
+            self._check_grain(table)
+        staged = self._cluster(
+            df.withColumn(part_col, _grain_value(part_col)), part_col
+        )
+        w = staged.write.mode(mode)
+        if dynamic:
+            w = w.option("partitionOverwriteMode", "dynamic")
+        w.partitionBy(part_col).parquet(path)
 
-    def write_partitions_dynamic(self, table: str, df: DataFrame) -> None:
-        """Overwrite ONLY the partitions present in ``df`` (trade_month for
-        intraday tables, trade_year for dailies), leaving every other
-        partition's files untouched. The incremental-ingest write: a daily
-        tick batch touches one month of minute bars, so the rebuild rewrites
-        one partition, not the table. Always uses the base path-layout
-        writer (bucketed/z-order subclasses route their own full writes
-        through saveAsTable, which has no dynamic mode)."""
-        Warehouse.write(self, table, df, dynamic=True)
+    def _cluster(self, df: DataFrame, part_col: str) -> DataFrame:
+        """The file layout inside each partition: one task per partition
+        value, rows sorted by (symbol, trade_date)."""
+        return df.repartition(part_col).sortWithinPartitions("symbol", "trade_date")
 
     def _on_disk_part_col(self, table: str) -> str | None:
         """The partition column actually present on disk (None for a
@@ -123,12 +167,12 @@ class Warehouse:
                     return name
         return None
 
-    def _check_grain(self, table: str, part_col: str) -> None:
+    def _check_grain(self, table: str) -> None:
         on_disk = self._on_disk_part_col(table)
-        if on_disk and on_disk != part_col:
+        if on_disk and on_disk != GRAIN[table]:
             raise ValueError(
                 f"{table} at {self.path(table)} is partitioned by "
-                f"{on_disk}= on disk but this writer lands {part_col}= "
+                f"{on_disk}= on disk but this writer lands {GRAIN[table]}= "
                 f"dirs; migrate first: python -m simtradedata_spark "
                 f"maintain --root {self.root} --regrain {table}"
             )
@@ -137,39 +181,19 @@ class Warehouse:
         """Migrate a table whose on-disk partition grain predates the
         current layout (e.g. a minute_bars written under trade_year=
         before intraday tables moved to month grain) by rewriting it at
-        the grain ``write`` uses today. Staged like ``compact``: the
-        replacement is fully written beside the live dir, then swapped —
-        a crash leaves either the old table or a finished staging dir,
-        never a mixed-grain table. No-op (regrained=False) when the grain
-        already matches, the table is unpartitioned, or it is absent."""
-        import shutil
-
+        its ``GRAIN``. The replacement is fully written to a staging dir,
+        then ``_swap``-ped in: a crash leaves either the old table or a
+        finished staging dir, never a mixed-grain table. No-op
+        (regrained=False) when the grain already matches, the table is
+        unpartitioned, or it is absent."""
         live = self.path(table)
-        tmp_root = os.path.join(self.root, f".{table}.regrain-tmp")
-        trash = os.path.join(self.root, f".{table}.regrain-trash")
-        # sweep a previous crashed run: a stranded trash dir is a
-        # superseded original (drop it); a stranded staging table with no
-        # live dir is a finished rewrite whose swap never happened
-        if os.path.isdir(trash):
-            shutil.rmtree(trash)
-        staged = os.path.join(tmp_root, table)
-        if os.path.isdir(staged) and not os.path.isdir(live):
-            os.rename(staged, live)
-        if os.path.isdir(tmp_root):
-            shutil.rmtree(tmp_root)
-
-        want = "trade_month" if table in MONTH_GRAIN else "trade_year"
+        _sweep(self.root, f".{table}.")
+        want = GRAIN.get(table)
         on_disk = self._on_disk_part_col(table)
-        if table not in PARTITIONED or on_disk in (None, want):
+        if want is None or on_disk in (None, want):
             return {"table": table, "regrained": False, "grain": on_disk}
-        # plain-Warehouse staging layout: grain is what regrain fixes;
-        # clustered layouts (bucketed/z-order) are restored by their own
-        # writers afterwards if wanted
-        Warehouse(self.spark, tmp_root).write(table, self.read(table))
-        os.rename(live, trash)
-        os.rename(staged, live)
-        shutil.rmtree(trash)
-        os.rmdir(tmp_root)
+        self._write_to(_staging(live, "regrain"), table, self.read(table))
+        _swap(live, "regrain")
         return {"table": table, "regrained": True, "grain": want}
 
     def read(self, table: str, merge_schema: bool = False) -> DataFrame:
@@ -201,8 +225,8 @@ class Warehouse:
         df = self.spark.read.parquet(self.path(table))
         part = next((c for c in _PART_COLS if c in df.columns), None)
 
-        def _bound(d: str) -> int:  # 'yyyy-mm-dd' -> partition value
-            return int(d[:4]) if part == "trade_year" else int(d[:7].replace("-", ""))
+        def _bound(d: str) -> Column:  # the partition value holding date d
+            return _grain_value(part, F.lit(d).cast("date"))
 
         if start:
             df = df.filter(F.col(date_col) >= start)
@@ -246,41 +270,13 @@ class Warehouse:
         semantics as ``write(mode="overwrite")``; pair with table-level
         locking or a metastore for concurrent readers.
         """
-        import math
-        import shutil
-
         root = self.path(table)
-        # Sweep leftovers from a previous crashed run first: a stranded
-        # .compact-tmp is a fully-written replacement whose swap never
-        # happened (finish the swap if the live dir is gone), and a
-        # stranded .compact-trash is a superseded original (safe to drop).
-        # Partition-level staging lives inside the table dir; table-level
-        # staging (unpartitioned case) lives beside it in the warehouse
-        # root — check both.
-        candidates = [
-            (parent, d)
-            for parent, dirs, _files in (
-                os.walk(root) if os.path.isdir(root) else []
-            )
-            for d in dirs
-            if d.endswith((".compact-tmp", ".compact-trash"))
-        ] + [
-            (self.root, d)
-            for d in os.listdir(self.root)
-            if d.startswith(f".{table}.compact-")
-        ]
-        for parent, d in candidates:
-            p = os.path.join(parent, d)
-            if not os.path.isdir(p):
-                continue
-            if d.endswith(".compact-trash"):
-                shutil.rmtree(p)
-            elif d.endswith(".compact-tmp"):
-                live = os.path.join(parent, d[1:][: -len(".compact-tmp")])
-                if not os.path.isdir(live):
-                    os.rename(p, live)  # finish the interrupted swap
-                else:
-                    shutil.rmtree(p)
+        # Finish or drop what a crashed run left: partition-level staging
+        # lives inside the table dir, table-level staging (unpartitioned
+        # case) beside it in the warehouse root.
+        _sweep(self.root, f".{table}.")
+        for parent in [dp for dp, _dirs, _files in os.walk(root)]:
+            _sweep(parent)
         # Recurse to LEAF partition dirs: a table partitioned by
         # (exchange, year) nests key=value dirs two deep, and scanning only
         # the first level would find zero parquet files and silently report
@@ -317,28 +313,11 @@ class Warehouse:
             # mergeSchema: a partition whose files straddle a schema
             # evolution must keep the union schema, not one random footer.
             df = self.spark.read.option("mergeSchema", "true").parquet(pdir)
-            # dot-prefixed staging: hidden to Spark's file listing, so a
-            # concurrent reader never parses a half-written sibling as a
-            # bogus partition value.
-            staging = os.path.join(
-                os.path.dirname(pdir), "." + os.path.basename(pdir) + ".compact-tmp"
-            )
             w = df.repartition(n_target)
             if sort_cols:
                 w = w.sortWithinPartitions(*sort_cols)
-            w.write.mode("overwrite").parquet(staging)
-            # Rename-aside swap: never a moment where the partition is
-            # simply GONE. A crash between the renames leaves the new data
-            # in .compact-tmp with no live dir — the sweep above finishes
-            # that swap on the next run; a crash after leaves only
-            # .compact-trash, which the sweep drops.
-            trash = os.path.join(
-                os.path.dirname(pdir),
-                "." + os.path.basename(pdir) + ".compact-trash",
-            )
-            os.rename(pdir, trash)
-            os.rename(staging, pdir)
-            shutil.rmtree(trash)
+            w.write.mode("overwrite").parquet(_staging(pdir, "compact"))
+            _swap(pdir, "compact")
             stats["files_after"] += sum(
                 1 for f in os.listdir(pdir) if f.endswith(".parquet")
             )
@@ -351,7 +330,8 @@ def build_warehouse(
 ) -> Warehouse:
     """Generate the full synthetic market and persist every table — the
     engine-side replacement for scripts/download_efficient.py (§3.1).
-    Pass a ``warehouse`` instance (e.g. BucketedWarehouse) to control layout."""
+    Pass a ``warehouse`` instance (e.g. ``ZOrderWarehouse``) to choose the
+    file layout inside each partition; the partition grain is ``GRAIN``."""
     from simtradedata_spark.sources.synthetic import SyntheticMarket
 
     market = market or SyntheticMarket(spark)
@@ -384,48 +364,6 @@ def build_warehouse(
     return wh
 
 
-class BucketedWarehouse(Warehouse):
-    """Warehouse variant whose fact tables are bucketed by symbol — the §6
-    checklist item realized. Bucketing pre-shuffles data ONCE at write time:
-    two tables bucketed by the same column into the same N join/aggregate on
-    that column with NO exchange at query time (verified by plan assertion in
-    tests). This is what turns the bars ⋈ adjust_factor / bars ⋈ valuation
-    hot joins into exchange-free sort-merge joins at 100 TB.
-
-    Bucketed writes go through ``saveAsTable`` (bucket metadata lives in the
-    metastore, which Spark requires for bucket-aware planning); the path
-    layout under ``spark.sql.warehouse.dir`` is ordinary parquet.
-    """
-
-    def __init__(self, spark: SparkSession, root: str, n_buckets: int = 8):
-        super().__init__(spark, root)
-        self.n_buckets = n_buckets
-
-    def _qualified(self, table: str) -> str:
-        return f"bucketed_{table}"
-
-    def write(self, table: str, df: DataFrame, mode: str = "overwrite") -> None:
-        if table in PARTITIONED and "symbol" in df.columns:
-            sort_cols = (
-                ["symbol", "trade_date"] if "trade_date" in df.columns else ["symbol"]
-            )
-            (
-                df.repartition(self.n_buckets, "symbol")
-                .write.mode(mode)
-                .bucketBy(self.n_buckets, "symbol")
-                .sortBy(*sort_cols)
-                .option("path", self.path(table))
-                .saveAsTable(self._qualified(table))
-            )
-        else:
-            super().write(table, df, mode)
-
-    def read(self, table: str) -> DataFrame:
-        if self.spark.catalog.tableExists(self._qualified(table)):
-            return self.spark.table(self._qualified(table))
-        return super().read(table)
-
-
 def zorder_value(a: F.Column, b: F.Column, bits: int = 16) -> F.Column:
     """Interleave the low ``bits`` bits of two non-negative int columns into
     one Z-value (Morton code). Rows sorted by the Z-value cluster into
@@ -451,69 +389,50 @@ class ZOrderWarehouse(Warehouse):
     partition: symbol predicates skip row groups via footer min/max, but a
     date predicate inside the year must read every row group (date min/max
     spans the whole partition in every file). Z-ordering makes BOTH
-    predicates skip: symbol's coordinate is a stable 16-bit hash, date's is
-    days-since-epoch, files cover Z-ranges ≈ rectangles. At 100 TB this is
-    the difference between a backtest-day slice reading ~1/√F of a year and
-    reading all of it. Verified by reading parquet footers in
-    tests/test_zorder.py, not by assertion on faith."""
+    predicates skip: symbol's coordinate is its dense lexicographic rank,
+    date's is the day offset, files cover Z-ranges ≈ rectangles. At 100 TB
+    this is the difference between a backtest-day slice reading ~1/√F of a
+    year and reading all of it. Verified by reading parquet footers in
+    tests/test_zorder.py, not by assertion on faith. Only the
+    within-partition layout (``_cluster``) differs from ``Warehouse``; the
+    grain, its guard and the dynamic overwrite are the base writer's."""
 
     def __init__(self, spark: SparkSession, root: str, files_per_partition: int = 16):
         super().__init__(spark, root)
         self.files = files_per_partition
 
-    def write(self, table: str, df: DataFrame, mode: str = "overwrite") -> None:
-        if table in PARTITIONED and {"symbol", "trade_date"} <= set(df.columns):
-            # Coordinates must be MONOTONE in each column's natural order —
-            # parquet footer min/max are on the raw columns, so a hashed
-            # coordinate would cluster by hash while the stats span the
-            # whole alphabet (measured: hash coords prune almost nothing).
-            # Symbol → dense lexicographic rank via a broadcast dictionary
-            # (the symbol dim is bounded — ~5k A-shares — at any scale);
-            # date → days offset. Both scaled to the SAME bit width so the
-            # interleave is balanced.
-            syms = sorted(
-                r[0] for r in df.select("symbol").distinct().collect()
-            )
-            bits = max(2, (max(len(syms), 2) - 1).bit_length())
-            sym_dim = df.sparkSession.createDataFrame(
-                [(s, i * (1 << bits) // len(syms)) for i, s in enumerate(syms)],
-                ["symbol", "__sx"],
-            )
-            bounds = df.agg(
-                F.min("trade_date").alias("d0"), F.max("trade_date").alias("d1")
-            ).first()
-            span = max((bounds["d1"] - bounds["d0"]).days + 1, 1)
-            dx = (
-                F.datediff("trade_date", F.lit(str(bounds["d0"])))
-                * (1 << bits)
-                / span
-            ).cast("long")
-            z = zorder_value(F.col("__sx").cast("long"), dx, bits=bits)
-            # Same partition grain as the base writer (trade_month for
-            # intraday tables, trade_year for dailies): a z-ordered build
-            # and a later plain-Warehouse ingest must land the same layout,
-            # or partition discovery fails on the mixed directory names.
-            if table in MONTH_GRAIN:
-                part_col = "trade_month"
-                part_val = F.year("trade_date") * 100 + F.month("trade_date")
-            else:
-                part_col = "trade_year"
-                part_val = F.year("trade_date")
-            if mode == "append":
-                self._check_grain(table, part_col)
-            staged = (
-                df.join(F.broadcast(sym_dim), "symbol")
-                .withColumn(part_col, part_val)
-                .withColumn("__z", z)
-                .repartitionByRange(self.files, part_col, "__z")
-                .sortWithinPartitions(part_col, "__z")
-                .drop("__z", "__sx")
-            )
-            staged.write.mode(mode).partitionBy(part_col).parquet(
-                self.path(table)
-            )
-        else:
-            super().write(table, df, mode)
+    def _cluster(self, df: DataFrame, part_col: str) -> DataFrame:
+        # Coordinates must be MONOTONE in each column's natural order —
+        # parquet footer min/max are on the raw columns, so a hashed
+        # coordinate would cluster by hash while the stats span the
+        # whole alphabet (measured: hash coords prune almost nothing).
+        # Symbol → dense lexicographic rank via a broadcast dictionary
+        # (the symbol dim is bounded — ~5k A-shares — at any scale);
+        # date → days offset. Both scaled to the SAME bit width so the
+        # interleave is balanced.
+        syms = sorted(r[0] for r in df.select("symbol").distinct().collect())
+        bits = max(2, (max(len(syms), 2) - 1).bit_length())
+        sym_dim = df.sparkSession.createDataFrame(
+            [(s, i * (1 << bits) // len(syms)) for i, s in enumerate(syms)],
+            ["symbol", "__sx"],
+        )
+        bounds = df.agg(
+            F.min("trade_date").alias("d0"), F.max("trade_date").alias("d1")
+        ).first()
+        span = max((bounds["d1"] - bounds["d0"]).days + 1, 1)
+        dx = (
+            F.datediff("trade_date", F.lit(str(bounds["d0"])))
+            * (1 << bits)
+            / span
+        ).cast("long")
+        z = zorder_value(F.col("__sx").cast("long"), dx, bits=bits)
+        return (
+            df.join(F.broadcast(sym_dim), "symbol")
+            .withColumn("__z", z)
+            .repartitionByRange(self.files, part_col, "__z")
+            .sortWithinPartitions(part_col, "__z")
+            .drop("__z", "__sx")
+        )
 
 
 def materialize_adjusted(wh: Warehouse) -> None:

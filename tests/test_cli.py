@@ -17,6 +17,7 @@ def test_cli_build_smoke(spark, tmp_path):
             "2022-01-03",
             "--end",
             "2022-03-31",
+            "--zorder",
         ]
     )
     assert rc == 0
@@ -25,6 +26,9 @@ def test_cli_build_smoke(spark, tmp_path):
     wh = Warehouse(spark, root)
     assert "bars" in wh.tables() and "ticks" in wh.tables()
     assert wh.read("bars").count() > 0
+    # the z-ordered build keeps the plain writer's partition grain
+    assert wh._on_disk_part_col("bars") == "trade_year"
+    assert wh._on_disk_part_col("minute_bars") == "trade_month"
 
 
 def test_cli_parser_shapes():

@@ -267,31 +267,38 @@ def test_snapshot_diff_across_schema_evolution(spark, tmp_path):
     assert diff[3]["_change_type"] == "insert"
 
 
-def test_compact_crash_recovery_finishes_interrupted_swap(spark, tmp_path):
-    """A crash between the two swap renames leaves new data in .compact-tmp
-    and no live dir; the next compact() finishes the swap instead of losing
-    the partition."""
+def _interrupted_swap_recovers(wh, table, df, op):
+    """A crash between the two swap renames leaves the finished staging dir
+    and no live dir; the next run of ``op`` (compact or regrain, the two
+    users of the swap) finishes the swap instead of losing the table."""
     import shutil
 
-    wh = Warehouse(spark, str(tmp_path / "crash"))
-    dim = spark.range(100).select(F.col("id"), (F.col("id") % 3).alias("grp"))
-    wh.write("stock_metadata", dim)
-    root = wh.path("stock_metadata")
+    wh.write(table, df)
+    root = wh.path(table)
     # simulate the crash window: live dir renamed away (to trash), staging
     # fully written but not yet swapped in
-    staging = os.path.join(
-        os.path.dirname(root), ".stock_metadata.compact-tmp"
-    )
-    trash = os.path.join(
-        os.path.dirname(root), ".stock_metadata.compact-trash"
-    )
+    staging = os.path.join(os.path.dirname(root), f".{table}.{op}-tmp")
+    trash = os.path.join(os.path.dirname(root), f".{table}.{op}-trash")
     shutil.copytree(root, staging)
     os.rename(root, trash)
-    assert not wh.exists("stock_metadata")
+    assert not wh.exists(table)
 
-    wh.compact("stock_metadata")
-    assert wh.read("stock_metadata").count() == 100
+    getattr(wh, op)(table)
+    assert wh.read(table).count() == df.count()
     assert not os.path.isdir(staging) and not os.path.isdir(trash)
+
+
+def test_compact_crash_recovery_finishes_interrupted_swap(spark, tmp_path):
+    dim = spark.range(100).select(F.col("id"), (F.col("id") % 3).alias("grp"))
+    wh = Warehouse(spark, str(tmp_path / "crash"))
+    _interrupted_swap_recovers(wh, "stock_metadata", dim, "compact")
+
+
+def test_regrain_crash_recovery_finishes_interrupted_swap(spark, tmp_path):
+    wh = Warehouse(spark, str(tmp_path / "crash"))
+    df = _intraday(spark, ("2022-01-03", "2022-02-20"))
+    _interrupted_swap_recovers(wh, "minute_bars", df, "regrain")
+    assert wh._on_disk_part_col("minute_bars") == "trade_month"
 
 
 def test_streaming_rollup_restart_replay_guard(spark, tmp_path):
@@ -529,7 +536,7 @@ def test_grain_guard_refuses_mixed_layout_and_regrain_migrates(spark, tmp_path):
 
     feb = df.filter(F.month("trade_date") == 2)
     with pytest.raises(ValueError, match="regrain"):
-        wh.write_partitions_dynamic("minute_bars", feb)
+        wh.write("minute_bars", feb, dynamic=True)
     with pytest.raises(ValueError, match="regrain"):
         wh.write("minute_bars", feb, mode="append")
 
@@ -540,7 +547,7 @@ def test_grain_guard_refuses_mixed_layout_and_regrain_migrates(spark, tmp_path):
     # idempotent second run is a no-op
     assert wh.regrain("minute_bars")["regrained"] is False
     # the previously refused dynamic write now lands cleanly
-    wh.write_partitions_dynamic("minute_bars", feb)
+    wh.write("minute_bars", feb, dynamic=True)
     assert wh.read("minute_bars").count() == df.count()
     # staging/trash fully cleaned up
     leftovers = [d for d in os.listdir(str(tmp_path)) if "regrain" in d]

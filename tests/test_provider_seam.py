@@ -80,6 +80,14 @@ def test_fixture_through_datasource_with_pushdown(spark):
         "2023-01-09",
     ]
     assert {r.close for r in out} == {7.33, 7.37, 7.50}
+    # one unified row schema: the DataSource and the mapInPandas fan-out
+    # type the status flags alike
+    symbols = spark.createDataFrame([("600000.SS",)], ["symbol"])
+    fanned = fetch_unified(
+        symbols, make_baostock_csv_provider(FIXTURE), "2023-01-03", "2023-01-09"
+    )
+    for col in ("is_st", "trade_status"):
+        assert df.schema[col].dataType == fanned.schema[col].dataType, col
 
 
 def test_fixture_to_warehouse_to_get_price(spark, tmp_path):

@@ -1,6 +1,7 @@
 """PTrade query API surface (SURVEY §2.12) against the synthetic warehouse."""
 
 import datetime as _dt
+import os
 
 import pandas as pd
 import pytest
@@ -292,6 +293,12 @@ def test_materialized_adjusted_cache(api, warehouse, spark):
     try:
         cached_api = PTradeDataAPI(warehouse)
         assert cached_api._has_table("bars_post")
+        # daily grain, so the cached read is a partition-pruned scan
+        for fq in ("pre", "post"):
+            assert any(
+                d.startswith("trade_year=")
+                for d in os.listdir(warehouse.path(f"bars_{fq}"))
+            ), fq
         cached = cached_api.get_price(
             "600000.SS", "2022-01-04", "2022-12-30", fq="post"
         )

@@ -129,8 +129,6 @@ def test_zorder_minute_grain_matches_plain_writer(spark, tmp_path):
 
     # the plain writer's dynamic overwrite lands beside it without conflict
     feb = intraday.filter(F.month("trade_date") == 2)
-    Warehouse(spark, str(tmp_path / "z")).write_partitions_dynamic(
-        "minute_bars", feb
-    )
+    Warehouse(spark, str(tmp_path / "z")).write("minute_bars", feb, dynamic=True)
     got = spark.read.parquet(zw.path("minute_bars"))
     assert got.count() == intraday.count()
