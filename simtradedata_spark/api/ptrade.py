@@ -23,8 +23,12 @@ import pandas as pd
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    BooleanType, ByteType, IntegerType, LongType, ShortType, StructType,
+)
 from pyspark.sql.window import Window
 
+from simtradedata_spark.functions.lits import local_rows
 from simtradedata_spark.operators.adjust import adjust_bars
 from simtradedata_spark.operators.asof import asof_join
 from simtradedata_spark.operators.indicators import compute_indicators
@@ -141,6 +145,29 @@ def _bar_args(frequency, fields):
     return freq, fields
 
 
+# toPandas's numpy type of each integral Spark type
+_INT_DTYPES = {ByteType: "int8", ShortType: "int16", IntegerType: "int32", LongType: "int64"}
+
+
+def _as_to_pandas(parts: list[pd.DataFrame], schema: StructType) -> pd.DataFrame:
+    """Point-cache row slices joined into the frame ``toPandas`` returns
+    for the same rows. A cache frame holds a symbol's whole history, pulled
+    with other symbols, so a nullable integer or boolean column is float64
+    or object there when any of those rows is null. toPandas decides on the
+    answer's own rows (SPARK-21766): float64 or object only if one of them
+    is null, else the column's numpy type (integers below 2**53 round-trip
+    float64 exactly)."""
+    pdf = pd.concat([p for p in parts if len(p)] or parts[:1], ignore_index=True)
+    for f in schema.fields:
+        t = bool if isinstance(f.dataType, BooleanType) else _INT_DTYPES.get(type(f.dataType))
+        if t is not None and f.name in pdf.columns:
+            col = pdf[f.name]
+            if col.isna().any():
+                t = object if t is bool else "float64"
+            pdf[f.name] = col.astype(t)
+    return pdf
+
+
 def _minute_ts() -> Column:
     """bar timestamp = trade_date + bar_time (hhmm) as a real timestamp."""
     return F.to_timestamp(
@@ -163,16 +190,28 @@ class PTradeDataAPI:
     cache, done Spark-style). Partition pruning stops mattering because the
     scan is already in memory.
 
-    ``point_cache=True`` keeps a client-side pandas copy of each symbol's
-    whole bar history, keyed (symbol, fq, minutes), pulled once through the
-    normal Spark path (fq handling included) and sliced in pandas after
-    that (~1 ms against a ~250 ms Spark job floor; the reference v1.0 is
-    SQLite + LRU with 30 ms point lookups). It serves ``get_price`` and
-    ``get_history`` at daily and minute frequencies for stored bar fields
-    (``BAR_FIELDS`` daily, ``MINUTE_FIELDS`` minute). Resampled
-    frequencies, other daily columns and ``fill='pre'`` stay on Spark.
-    Per-symbol history is a few thousand daily (a few 10k minute) rows;
-    the 100 TB answer remains the vectorized batch path."""
+    ``point_cache=True`` keeps one client-side pandas cache of each
+    symbol's whole history, keyed (kind, symbol, fq, minutes), and answers
+    from it in pandas (~1-10 ms against a ~100-250 ms Spark job floor; the
+    reference v1.0 is SQLite + LRU with 30 ms point lookups). A call pulls
+    every symbol it finds missing in one Spark query per kind
+    (``_point_frames``). It serves:
+
+    - ``get_price`` / ``get_history`` at daily and minute frequencies for
+      stored bar fields (``BAR_FIELDS`` daily, ``MINUTE_FIELDS`` minute),
+      kind ``"bars"`` under that fq and width;
+    - ``get_fundamentals(table='valuation')``: the last row on or before
+      ``date`` (the last row without one);
+    - ``get_stock_status`` for ``'ST'`` and ``'HALT'``: the row on exactly
+      ``query_date``, a missing row or null flag meaning False (the last
+      row without a date).
+
+    Answers equal the Spark path's in values, dtypes and index. Resampled
+    frequencies, other daily bar columns, ``fill='pre'`` (pandas cannot
+    tell a stored NaN from a null), ``'DELISTING'`` and the other
+    fundamentals tables stay on Spark. Per-symbol history is a few
+    thousand daily (a few 10k minute) rows; the 100 TB answer remains the
+    vectorized batch path."""
 
     def __init__(
         self,
@@ -187,7 +226,10 @@ class PTradeDataAPI:
         self._cached: dict[str, DataFrame] = {}
         self._trade_days: list[str] | None = None
         self._point_cache = point_cache
-        self._point_bars: dict[tuple[str, str, int | None], pd.DataFrame] = {}
+        # (kind, symbol, fq, minutes) → (rows, schema); see _point_frames
+        self._point_rows: dict[
+            tuple[str, str, str | None, int | None], tuple[pd.DataFrame, StructType]
+        ] = {}
 
     def _table(self, name: str) -> DataFrame:
         if not self._cache_tables:
@@ -327,9 +369,7 @@ class PTradeDataAPI:
                 (F.col("trade_date") >= b["lo"]) & (F.col("trade_date") <= b["hi"])
             )
         )
-        syms = self.spark.createDataFrame(
-            [(s,) for s in securities], "symbol string"
-        )
+        syms = local_rows(self.spark, [(s,) for s in securities], "symbol string")
         mins = self.spark.range(0, 240, minutes).select(
             _session_minute_to_hhmm(F.col("id")).cast("int").alias("bar_time")
         )
@@ -361,9 +401,37 @@ class PTradeDataAPI:
         )
         return mb
 
+    def _point_frames(self, kind, securities, fq=None, minutes=None) -> list:
+        """The point cache's (rows, schema) of each security, keyed (kind,
+        symbol, fq, minutes). Kind ``"bars"`` holds the stored bar fields
+        at daily (``minutes`` None) or N-minute width under ``fq``; any
+        other kind is that daily table's whole rows. Every security the
+        cache lacks is pulled in one Spark query and split by symbol. Rows
+        are in time order with the date string in ``__d``; an unknown
+        symbol holds none."""
+        keys = [(kind, s, fq, minutes) for s in securities]
+        missing = [k for k in dict.fromkeys(keys) if k not in self._point_rows]
+        if missing:
+            syms = [k[1] for k in missing]
+            if kind == "bars":
+                df = self._bar_query(
+                    syms, MINUTE_FIELDS if minutes else BAR_FIELDS, fq,
+                    ("min", minutes) if minutes else None,
+                )
+            else:
+                df = self._table(kind).filter(F.col("symbol").isin(syms))
+            schema = df.schema
+            pdf = df.toPandas().sort_values("trade_date", kind="mergesort")
+            pdf["__d"] = pdf["trade_date"].astype(str).str[:10]
+            groups = dict(list(pdf.groupby("symbol", sort=False)))
+            for k in missing:
+                rows = groups.get(k[1], pdf.iloc[:0]).reset_index(drop=True)
+                self._point_rows[k] = (rows, schema)
+        return [self._point_rows[k] for k in keys]
+
     def _bar_rows(
         self, securities, fields, fq, freq, start=None, end=None, count=None,
-        end_inclusive=False, fill="nan", *, point=True,
+        end_inclusive=False, fill="nan",
     ) -> pd.DataFrame:
         """The one bar path behind get_price and get_history: rows
         (symbol, trade_date, *fields) ordered by (trade_date, symbol).
@@ -375,40 +443,44 @@ class PTradeDataAPI:
         densifies minute bars to the session grid.
 
         With ``point_cache`` on, daily and minute reads of stored bar
-        fields without ``fill='pre'`` slice the per-symbol pandas history,
-        which is pulled once through the Spark path below (``point=False``).
-        ``fill='pre'`` needs the Spark forward-fill or session grid, and
-        resampled bars fold from daily on Spark, so both stay there."""
+        fields without ``fill='pre'`` slice the cached per-symbol history,
+        which ``_point_frames`` pulls through ``_bar_query``. ``fill='pre'``
+        needs the Spark forward-fill or session grid, and resampled bars
+        fold from daily on Spark, so both stay there."""
         minutes = freq[1] if isinstance(freq, tuple) else None
         stored = MINUTE_FIELDS if minutes else BAR_FIELDS
         if (
-            point and self._point_cache and fill != "pre"
+            self._point_cache and securities and fill != "pre"
             and not isinstance(freq, str) and set(fields) <= set(stored)
         ):
             parts = []
-            for sym in securities:
-                key = (sym, fq or "none", minutes)
-                pdf = self._point_bars.get(key)
-                if pdf is None:
-                    pdf = self._bar_rows([sym], stored, fq, freq, point=False)
-                    pdf["__d"] = pdf["trade_date"].astype(str).str[:10]
-                    self._point_bars[key] = pdf
+            for rows, schema in self._point_frames("bars", securities, fq, minutes):
                 if count is not None:
                     if end:
-                        keep = pdf["__d"] <= end if end_inclusive else pdf["__d"] < end
-                        pdf = pdf[keep]
-                    pdf = pdf.tail(count)
+                        d = rows["__d"]
+                        rows = rows[d <= end if end_inclusive else d < end]
+                    rows = rows.tail(count)
                 else:
                     if start:
-                        pdf = pdf[pdf["__d"] >= start]
+                        rows = rows[rows["__d"] >= start]
                     if end:
-                        pdf = pdf[pdf["__d"] <= end]
-                parts.append(pdf)
+                        rows = rows[rows["__d"] <= end]
+                parts.append(rows)
             return (
-                pd.concat(parts, ignore_index=True)
+                _as_to_pandas(parts, schema)
                 .sort_values(["trade_date", "symbol"], kind="mergesort")
                 .reset_index(drop=True)[["symbol", "trade_date", *fields]]
             )
+        return self._bar_query(
+            securities, fields, fq, freq, start, end, count, end_inclusive, fill
+        ).orderBy("trade_date", "symbol").toPandas()
+
+    def _bar_query(
+        self, securities, fields, fq, freq, start=None, end=None, count=None,
+        end_inclusive=False, fill="nan",
+    ) -> DataFrame:
+        """``_bar_rows``'s Spark query, unordered."""
+        minutes = freq[1] if isinstance(freq, tuple) else None
         if minutes:
             bars = self._minute_bars(securities, fq, start, end, minutes)
             if fill == "pre":
@@ -440,11 +512,7 @@ class PTradeDataAPI:
                 .drop("__rn")
             )
         ts = _minute_ts().alias("trade_date") if minutes else F.col("trade_date")
-        return (
-            bars.select("symbol", ts, *fields)
-            .orderBy("trade_date", "symbol")
-            .toPandas()
-        )
+        return bars.select("symbol", ts, *fields)
 
     def get_price(
         self,
@@ -1102,7 +1170,9 @@ class PTradeDataAPI:
     # -- status predicates (F5/F6/F7) --------------------------------------
 
     def get_stock_status(self, stocks, query_type="ST", query_date=None) -> dict:
-        """``ptrade_data_api.py:308-422``."""
+        """``ptrade_data_api.py:308-422``. ST/HALT read the stock_status
+        row on exactly ``query_date`` (the latest row without one); a
+        missing row or a null flag is False."""
         stocks = _as_list(stocks)
         if query_type not in ("ST", "HALT", "DELISTING"):
             raise ValueError(query_type)
@@ -1117,13 +1187,22 @@ class PTradeDataAPI:
                 )
                 for r in rows
             }
+        col = "is_st" if query_type == "ST" else "is_halt"
+        d = _to_date_str(query_date) if query_date else None
+        if self._point_cache:
+            found = {}
+            for s, (rows, _) in zip(stocks, self._point_frames("stock_status", stocks)):
+                i = len(rows) if d is None else rows["__d"].searchsorted(d, "right")
+                if i and (d is None or rows["__d"].iat[i - 1] == d):
+                    flag = rows[col].iat[i - 1]
+                    found[s] = not pd.isna(flag) and bool(flag)
+            return {s: found.get(s, False) for s in stocks}
         st = self._table("stock_status").filter(F.col("symbol").isin(stocks))
-        if query_date:
-            st = st.filter(F.col("trade_date") == _to_date_str(query_date))
+        if d:
+            st = st.filter(F.col("trade_date") == d)
         else:
             w = Window.partitionBy("symbol").orderBy(F.col("trade_date").desc())
             st = st.withColumn("__rn", F.row_number().over(w)).filter("__rn = 1")
-        col = "is_st" if query_type == "ST" else "is_halt"
         rows = st.select("symbol", col).collect()
         found = {r["symbol"]: bool(r[col]) for r in rows}
         return {s: found.get(s, False) for s in stocks}
@@ -1177,8 +1256,8 @@ class PTradeDataAPI:
 
         if date is not None:
             d = _to_date_str(date)
-            probe = self.spark.createDataFrame(
-                [(s, d) for s in stocks], "symbol string, qd string"
+            probe = local_rows(
+                self.spark, [(s, d) for s in stocks], "symbol string, qd string"
             ).select("symbol", F.col("qd").cast("date").alias("publ_date"))
             payload = [c for c in f.columns if c not in ("symbol", "publ_date")]
             joined = asof_join(probe, f, on="publ_date", by=["symbol"], right_cols=payload)
@@ -1198,13 +1277,26 @@ class PTradeDataAPI:
 
     def _valuation_fundamentals(self, stocks, fields, date) -> pd.DataFrame:
         """``get_fundamentals(table='valuation')`` — daily table, so the
-        as-of is the latest trade date <= query date (suspension-safe)."""
-        v = self._table("valuation").filter(F.col("symbol").isin(stocks))
-        if date is not None:
-            v = v.filter(F.col("trade_date") <= _to_date_str(date))
-        w = Window.partitionBy("symbol").orderBy(F.col("trade_date").desc())
-        v = v.withColumn("__rn", F.row_number().over(w)).filter("__rn = 1").drop("__rn")
-        pdf = v.toPandas()
+        as-of is the latest trade date <= query date (suspension-safe).
+        Rows follow ``stocks``, duplicates dropped."""
+        d = _to_date_str(date) if date is not None else None
+        order = list(dict.fromkeys(stocks))
+        if self._point_cache and order:
+            parts = []
+            for rows, schema in self._point_frames("valuation", order):
+                i = len(rows) if d is None else rows["__d"].searchsorted(d, "right")
+                parts.append(rows.iloc[i - 1:i] if i else rows.iloc[:0])
+            pdf = _as_to_pandas(parts, schema).drop(columns="__d")
+        else:
+            v = self._table("valuation").filter(F.col("symbol").isin(order))
+            if d is not None:
+                v = v.filter(F.col("trade_date") <= d)
+            w = Window.partitionBy("symbol").orderBy(F.col("trade_date").desc())
+            v = v.withColumn("__rn", F.row_number().over(w)).filter("__rn = 1").drop("__rn")
+            rank = {s: i for i, s in enumerate(order)}
+            pdf = v.toPandas().sort_values(
+                "symbol", key=lambda c: c.map(rank), kind="mergesort"
+            )
         if fields:
             keep = ["symbol", "trade_date"] + [c for c in fields if c in pdf.columns]
             pdf = pdf[keep]

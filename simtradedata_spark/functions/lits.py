@@ -1,4 +1,5 @@
-"""One-py4j-call construction of large (nested) array literals.
+"""One-py4j-call construction of large (nested) array literals, and of
+small driver-side tables (``local_rows``).
 
 ``F.lit(nested_python_list)`` in PySpark 4.1 classic expands RECURSIVELY —
 ``lit(list)`` becomes ``array(*[lit(x) for x in list])`` — so an
@@ -19,8 +20,9 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def _render(v) -> str:
@@ -51,3 +53,23 @@ def fast_lit(values) -> Column:
     semantically ``F.lit(values)`` (int elements typed bigint), built with
     ONE py4j call instead of one per element."""
     return F.expr(_render(values))
+
+
+def local_rows(spark, rows, schema: str) -> DataFrame:
+    """``spark.createDataFrame(rows, schema)`` for a handful of driver-side
+    rows, built as a JVM-local relation (SQL ``VALUES`` rendered by
+    ``_render``, so ints, strings, bools and finite doubles stay exact;
+    ``None`` is NULL) and cast to the DDL ``schema``; a column without
+    NULLs comes out not nullable. ``createDataFrame`` over a list goes through a Python
+    RDD, which in a fresh process starts the pyspark daemon and one worker
+    per partition just to hold the rows."""
+    fields = StructType.fromDDL(schema).fields
+    values = ",".join(
+        "(" + ",".join("NULL" if v is None else _render(v) for v in row) + ")"
+        for row in rows or [[None] * len(fields)]
+    )
+    names = ",".join(f"c{i}" for i in range(len(fields)))
+    df = spark.sql(f"SELECT * FROM VALUES {values} AS t({names})").select(
+        *[F.col(f"c{i}").cast(f.dataType).alias(f.name) for i, f in enumerate(fields)]
+    )
+    return df if rows else df.limit(0)

@@ -2041,12 +2041,13 @@ def q_bpe_merges(spark, sf_dir):
     the (word, count) vocab once; every iteration is vocab-sized with a
     bounded 1-row argmax collect (the merge decision is global sequential
     state by definition)."""
+    from simtradedata_spark.functions.lits import local_rows
     from simtradedata_spark.operators.bpe import bpe_learn
 
     docs = _t(spark, sf_dir, "documents")
     merges, _vocab = bpe_learn(docs, num_merges=8)
-    return spark.createDataFrame(
-        merges, "rank int, left string, right string, pair_count long"
+    return local_rows(
+        spark, merges, "rank int, left string, right string, pair_count long"
     )
 
 
@@ -2130,6 +2131,7 @@ def q_logit_training(spark, sf_dir):
     and the update rule at every step — the kmeans treatment applied to
     model training. (The trained-coefficient INFERENCE path is already
     certified by quality_classifier.)"""
+    from simtradedata_spark.functions.lits import local_rows
     from simtradedata_spark.operators.mlr import logistic_regression
     from simtradedata_spark.operators.dedup import tokens
 
@@ -2145,7 +2147,8 @@ def q_logit_training(spark, sf_dir):
     traj = logistic_regression(
         feats, ["f1"], "y", steps=_LOGIT_STEPS, lr=_LOGIT_LR
     )
-    return spark.createDataFrame(
+    return local_rows(
+        spark,
         [(i + 1, w[0], w[1]) for i, w in enumerate(traj)],
         "step int, b double, w1 double",
     )

@@ -8,6 +8,7 @@ pointwise and set-oriented paths can never disagree."""
 
 import bisect
 
+import pandas as pd
 from pyspark.sql import functions as F
 
 from simtradedata_spark.operators.windows import moving_avg
@@ -98,3 +99,66 @@ def test_minute_backtest_loop_matches_batch_signals(warehouse):
         # strategy on day d sees bars strictly before d: the last bar row
         prev = pdf[pdf["d"] < d].iloc[-1]
         assert (prev.ma_s > prev.ma_l) == sig, f"minute signal mismatch on {d}"
+
+
+def _assert_same(a, b):
+    assert type(a) is type(b)
+    if isinstance(a, pd.DataFrame):
+        pd.testing.assert_frame_equal(a, b)
+    elif isinstance(a, dict):
+        assert a.keys() == b.keys()
+        for k in a:
+            _assert_same(a[k], b[k])
+    else:
+        assert a == b
+
+
+def test_backtest_day_cached_client_equals_plain_client(warehouse):
+    """The benchmark's trading day (perfbench/backtest.py::_day: history,
+    ST status, valuation; on a rebalance day also get_Ashares, a weekly
+    pre-adjusted get_price and a forward-filled history) stepped over 10
+    days on a plain client and on the backtest client (cache_tables and
+    point_cache). Every answer is equal. The universe gains two symbols at
+    the rebalance, and after the first day the cached client's daily calls
+    run at most one Spark job per table: the one fill that pulls both new
+    symbols. Jobs are counted by the DAGScheduler id range, as
+    runner.run_query does."""
+    from simtradedata_spark.api.ptrade import PTradeDataAPI
+    from simtradedata_spark.runner import _next_ids
+
+    plain = PTradeDataAPI(warehouse)
+    cached = PTradeDataAPI(warehouse, cache_tables=True, point_cache=True)
+    days = plain.get_trade_days("2022-08-15", "2022-12-31")[:10]
+    uni = ["600000.SS", "000001.SZ", "600002.SS", "000003.SZ", "000005.SZ"]
+    rebalance = 4
+    daily = {
+        "get_history": lambda api, d: api.get_history(
+            LONG_N, "1d", "close", uni, current_date=d
+        ),
+        "get_stock_status": lambda api, d: api.get_stock_status(uni, "ST", d),
+        "get_fundamentals": lambda api, d: api.get_fundamentals(
+            uni, "valuation", fields=["pe_ttm", "total_value"], date=d
+        ),
+    }
+    jobs = dict.fromkeys(daily, 0)
+    for i, d in enumerate(days):
+        if i == rebalance:
+            uni = uni + ["600004.SS", "000009.SZ"]
+            _assert_same(cached.get_Ashares(d), plain.get_Ashares(d))
+            start = days[i - rebalance]
+            _assert_same(
+                cached.get_price(uni, start, d, frequency="1w", fq="pre"),
+                plain.get_price(uni, start, d, frequency="1w", fq="pre"),
+            )
+            _assert_same(
+                cached.get_history(LONG_N, "1d", "close", uni, fill="pre", current_date=d),
+                plain.get_history(LONG_N, "1d", "close", uni, fill="pre", current_date=d),
+            )
+        for name, call in daily.items():
+            want = call(plain, d)
+            jobs0 = _next_ids(warehouse.spark)[0]
+            got = call(cached, d)
+            if i:
+                jobs[name] += _next_ids(warehouse.spark)[0] - jobs0
+            _assert_same(got, want)
+    assert all(n <= 1 for n in jobs.values()), jobs

@@ -7,7 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from simtradedata_spark.functions.lits import fast_lit
+from simtradedata_spark.functions.lits import fast_lit, local_rows
 
 
 def test_nested_doubles_match_f_lit(spark):
@@ -52,3 +52,26 @@ def test_rejects_empty_and_nonfinite():
         fast_lit([1.0, float("inf")])
     with pytest.raises(TypeError):
         fast_lit([object()])
+
+
+def test_local_rows_match_create_dataframe(spark):
+    """local_rows is createDataFrame for a few driver rows: the same
+    column names, types, values and order (NULLs, escaped strings, big
+    ints, edge doubles), planned as a local relation with no Python RDD.
+    (Nullability follows the values: a column without NULLs is not
+    nullable, which createDataFrame's always are.)"""
+    schema = "rank int, left string, right string, n long, w double, ok boolean"
+    rows = [
+        (1, "o'brien", "back\\slash", 2**40, -1.7976931348623157e308, True),
+        (2, "两个字", None, 7, 2.0 / 3.0, None),
+    ]
+    got = local_rows(spark, rows, schema)
+    want = spark.createDataFrame(rows, schema)
+    types = [(f.name, f.dataType) for f in want.schema]
+    assert [(f.name, f.dataType) for f in got.schema] == types
+    assert got.collect() == want.collect()
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+    empty = local_rows(spark, [], schema)
+    assert [(f.name, f.dataType) for f in empty.schema] == types
+    assert empty.collect() == []

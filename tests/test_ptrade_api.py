@@ -712,7 +712,7 @@ def test_point_cache_minute_parity(warehouse):
         a = slow.get_price(security, **kwargs)
         b = fast.get_price(security, **kwargs)
         pd.testing.assert_frame_equal(a, b)
-    assert ("600000.SS", "none", 1) in fast._point_bars
+    assert ("bars", "600000.SS", None, 1) in fast._point_rows
 
 
 def test_get_history_weekly_resample(api):
@@ -799,3 +799,122 @@ def test_point_cache_get_history_parity(warehouse):
     d2 = fast.get_history(5, field="close", security_list=["600000.SS"],
                           current_date="2022-06-15", is_dict=True)
     pd.testing.assert_frame_equal(d1["600000.SS"], d2["600000.SS"])
+
+
+# -- point cache: valuation and status ------------------------------------
+
+
+def _plain_and_point(warehouse):
+    from simtradedata_spark.api.ptrade import PTradeDataAPI
+
+    return PTradeDataAPI(warehouse), PTradeDataAPI(warehouse, point_cache=True)
+
+
+def test_point_cache_valuation_parity(warehouse):
+    """get_fundamentals('valuation') from the point cache equals the Spark
+    path in values, dtypes, index and row order: with and without
+    ``date``, ``fields=None``, an unknown symbol, a date before a symbol's
+    first row (000005.SZ lists a third into the range) and dates before
+    and after the data."""
+    slow, fast = _plain_and_point(warehouse)
+    stocks = ["600000.SS", "NOPE.SZ", "000005.SZ", "000001.SZ", "600000.SS"]
+    for kw in (
+        dict(fields=["pe_ttm", "total_value"], date="2022-06-15"),
+        dict(fields=None, date="2022-06-18"),  # a Saturday
+        dict(fields=["pb"]),  # no date: the last row
+        dict(fields=None, date="2021-12-31"),  # before every row
+        dict(fields=["pe_ttm"], date="20300101"),  # after the data
+        dict(fields=None, date=_dt.date(2023, 3, 1)),
+    ):
+        a = slow.get_fundamentals(stocks, "valuation", **kw)
+        b = fast.get_fundamentals(stocks, "valuation", **kw)
+        pd.testing.assert_frame_equal(a, b)
+    # rows follow the requested stocks, duplicates dropped, on both paths
+    for api in (slow, fast):
+        got = api.get_fundamentals(stocks, "valuation", date="2022-06-15")
+        assert list(got.index) == ["600000.SS", "000001.SZ"]
+        got = api.get_fundamentals(stocks, "valuation", date="2023-06-15")
+        assert list(got.index) == ["600000.SS", "000005.SZ", "000001.SZ"]
+
+
+def test_point_cache_stock_status_parity(warehouse):
+    """ST and HALT from the point cache equal the Spark path on a trading
+    day, a non-trading day, out-of-range dates and without a date,
+    including an unknown symbol, the ST symbol (600002.SS, ST from the
+    range's midpoint) and the suspended one (000003.SZ, halted on trading
+    days 100-109)."""
+    slow, fast = _plain_and_point(warehouse)
+    days = slow.get_trade_days()
+    stocks = ["600002.SS", "000003.SZ", "600000.SS", "NOPE.SZ", "000005.SZ"]
+    for qt in ("ST", "HALT"):
+        for d in (days[105], days[-5], "2022-06-18", "2021-06-01", "2030-01-01", None):
+            want = slow.get_stock_status(stocks, qt, d)
+            got = fast.get_stock_status(stocks, qt, d)
+            assert got == want, (qt, d)
+            assert all(type(v) is bool for v in got.values())
+    assert fast.get_stock_status(stocks, "HALT", days[105])["000003.SZ"] is True
+    assert fast.get_stock_status(stocks, "ST", days[-5])["600002.SS"] is True
+    assert fast.get_stock_status(stocks, "ST", days[5])["600002.SS"] is False
+
+
+def test_point_cache_null_flag_and_nullable_int_column(spark, tmp_path):
+    """toPandas turns a null tinyint flag into NaN, and a null anywhere in
+    an int column's rows makes the column float64. The point cache holds a
+    symbol's whole history, so it must still read a null flag as False
+    (``bool(NaN)`` is True) and give each answer the dtype the Spark path
+    gives that answer's own rows."""
+    from simtradedata_spark.api.ptrade import PTradeDataAPI
+    from simtradedata_spark.sources.tables import Warehouse
+
+    day = [_dt.date(2022, 3, 1) + _dt.timedelta(days=i) for i in range(4)]
+    a, b = "600009.SS", "000010.SZ"
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    wh.write("stock_status", spark.createDataFrame(
+        [(a, day[0], 1, 0), (a, day[1], None, None), (a, day[2], 0, 1),
+         (b, day[0], 0, None), (b, day[1], 1, 1)],
+        "symbol string, trade_date date, is_st tinyint, is_halt tinyint",
+    ))
+    wh.write("valuation", spark.createDataFrame(
+        [(a, day[0], 10.0, None), (a, day[1], 11.0, 500), (a, day[2], None, 600),
+         (b, day[0], 9.0, 700), (b, day[2], 8.0, 800)],
+        "symbol string, trade_date date, pe_ttm double, total_shares long",
+    ))
+    slow, fast = PTradeDataAPI(wh), PTradeDataAPI(wh, point_cache=True)
+    for d in (*day, None):
+        for qt in ("ST", "HALT"):
+            assert fast.get_stock_status([a, b], qt, d) == slow.get_stock_status([a, b], qt, d)
+        for stocks in ([a, b], [a], [b]):
+            pd.testing.assert_frame_equal(
+                fast.get_fundamentals(stocks, "valuation", fields=None, date=d),
+                slow.get_fundamentals(stocks, "valuation", fields=None, date=d),
+            )
+    assert fast.get_stock_status([a], "ST", day[1]) == {a: False}
+    assert fast.get_stock_status([b], "HALT", day[0]) == {b: False}
+    got = fast.get_fundamentals([a], "valuation", date=day[1])
+    assert got["total_shares"].dtype == "int64"  # day 0's null does not leak
+    got = fast.get_fundamentals([a, b], "valuation", date=day[0])
+    assert got["total_shares"].dtype == "float64"  # this answer holds the null
+
+
+def test_point_cache_tables_no_spark_after_warm(warehouse):
+    """After one status and one valuation call, repeat calls on those
+    symbols never touch Spark (proven by severing ``_table``); a new
+    symbol, DELISTING and the other fundamentals tables still do."""
+    slow, fast = _plain_and_point(warehouse)
+    stocks = ["600000.SS", "000003.SZ"]
+    fast.get_stock_status(stocks, "ST", "2022-06-15")
+    fast.get_fundamentals(stocks, "valuation", date="2022-06-15")
+    fast._table = None  # any further table read raises TypeError
+    for d in ("2022-03-01", "2022-06-06", "2023-09-29", None):
+        for qt in ("ST", "HALT"):
+            assert fast.get_stock_status(stocks, qt, d) == slow.get_stock_status(stocks, qt, d)
+        pd.testing.assert_frame_equal(
+            fast.get_fundamentals(stocks[::-1], "valuation", fields=["pb"], date=d),
+            slow.get_fundamentals(stocks[::-1], "valuation", fields=["pb"], date=d),
+        )
+    with pytest.raises(TypeError):
+        fast.get_stock_status(["600002.SS"], "ST", "2022-06-15")
+    with pytest.raises(TypeError):
+        fast.get_stock_status(stocks, "DELISTING")
+    with pytest.raises(TypeError):
+        fast.get_fundamentals(stocks, "growth_ability", date="2022-06-15")
