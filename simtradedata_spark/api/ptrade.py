@@ -455,17 +455,14 @@ class PTradeDataAPI:
         ):
             parts = []
             for rows, schema in self._point_frames("bars", securities, fq, minutes):
-                if count is not None:
-                    if end:
-                        d = rows["__d"]
-                        rows = rows[d <= end if end_inclusive else d < end]
-                    rows = rows.tail(count)
+                d = rows["__d"]  # in date order: bound by binary search
+                if count is None:
+                    lo = d.searchsorted(start) if start else 0
+                    hi = d.searchsorted(end, "right") if end else len(rows)
                 else:
-                    if start:
-                        rows = rows[rows["__d"] >= start]
-                    if end:
-                        rows = rows[rows["__d"] <= end]
-                parts.append(rows)
+                    hi = d.searchsorted(end, "right" if end_inclusive else "left") if end else len(rows)
+                    lo = max(hi - count, 0)
+                parts.append(rows.iloc[lo:hi])
             return (
                 _as_to_pandas(parts, schema)
                 .sort_values(["trade_date", "symbol"], kind="mergesort")
