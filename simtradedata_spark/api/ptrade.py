@@ -221,7 +221,6 @@ class PTradeDataAPI:
     ):
         self.wh = warehouse
         self.spark = warehouse.spark
-        self._table_exists: dict[str, bool] = {}
         self._cache_tables = cache_tables
         self._cached: dict[str, DataFrame] = {}
         self._trade_days: list[str] | None = None
@@ -301,54 +300,41 @@ class PTradeDataAPI:
     # -- bars --------------------------------------------------------------
 
     def _bars(self, securities: list[str], fq=None, start=None, end=None) -> DataFrame:
-        """start/end (inclusive date strings) flow into read_range so the
-        trade_year partition predicates prune directories at the scan."""
-        if fq in ("pre", "post"):
-            # materialized adjusted cache (sources/tables.py::
-            # materialize_adjusted): a pruned scan instead of a join
-            if self._has_table(f"bars_{fq}"):
-                return self._table_range(f"bars_{fq}", start, end).filter(
-                    F.col("symbol").isin(securities)
-                )
-            bars = self._table_range("bars", start, end).filter(
-                F.col("symbol").isin(securities)
-            )
-            return adjust_bars(bars, self._table("adjust_factor"), fq)
-        return self._table_range("bars", start, end).filter(
+        """Daily bars, read from the one stored ``bars`` table and adjusted
+        per ``fq`` on read, so a rebuilt ``bars``/``adjust_factor`` is what
+        every call sees. start/end (inclusive date strings) flow into
+        read_range so the trade_year partition predicates prune directories
+        at the scan."""
+        bars = self._table_range("bars", start, end).filter(
             F.col("symbol").isin(securities)
         )
+        return self._adjust(bars, fq)
 
-    def _has_table(self, name: str) -> bool:
-        exists = self._table_exists.get(name)
-        if exists is None:
-            exists = self._table_exists[name] = self.wh.exists(name)
-        return exists
+    def _adjust(self, bars: DataFrame, fq) -> DataFrame:
+        """``bars`` under ``fq``: unadjusted ``None``/``'none'`` leaves them
+        as stored without reading ``adjust_factor``; every other value goes
+        to ``adjust_bars``, which applies ``'pre'``/``'post'`` and raises
+        ValueError for anything else."""
+        if fq in (None, "none"):
+            return bars
+        return adjust_bars(bars, self._table("adjust_factor"), fq)
 
     def _minute_bars(
         self, securities, fq, start, end, minutes: int
     ) -> DataFrame:
-        """N-minute intraday bars: read the materialized 1-minute rollup
-        when the warehouse has one (coarser widths fold from it via
-        rebucket_minute_bars — never re-reading ticks), else derive from
-        the tick table on the fly. ``fq`` applies the SAME per-day A·x
-        factors as daily bars (OHLC scaled, volume divided); ``money`` is
-        actual turnover and ``vwap`` the raw traded price — neither is
-        restated under adjustment."""
-        from simtradedata_spark.operators.resample import (
-            rebucket_minute_bars,
-            time_bars_from_ticks,
-        )
+        """N-minute intraday bars, read from the one stored 1-minute rollup
+        ``minute_bars`` (both writers, ``build_warehouse`` and
+        ``ingest-ticks``, keep it in step with ``ticks``); coarser widths
+        fold from it via rebucket_minute_bars, never re-reading ticks.
+        ``fq`` applies the SAME per-day A·x factors as daily bars (OHLC
+        scaled, volume divided); ``money`` is actual turnover and ``vwap``
+        the raw traded price — neither is restated under adjustment."""
+        from simtradedata_spark.operators.resample import rebucket_minute_bars
 
-        if self._has_table("minute_bars"):
-            mb = self._table_range("minute_bars", start, end)
-        else:
-            mb = time_bars_from_ticks(self._table_range("ticks", start, end))
+        mb = self._table_range("minute_bars", start, end)
         if minutes > 1:
             mb = rebucket_minute_bars(mb, minutes)
-        mb = mb.filter(F.col("symbol").isin(securities))
-        if fq in ("pre", "post"):
-            mb = adjust_bars(mb, self._table("adjust_factor"), fq)
-        return mb
+        return self._adjust(mb.filter(F.col("symbol").isin(securities)), fq)
 
     def _densify_minute(self, mb, securities, minutes: int):
         """Full (symbol x trading-day x session-bucket) grid over the data's
@@ -1343,19 +1329,13 @@ class PTradeDataAPI:
                 "symbol", _minute_ts().alias("trade_date"), "high", "low", "close"
             )
             ind = compute_indicators(bars, ts_type="timestamp")
-            if start_date:
-                ind = ind.filter(
-                    F.to_date("trade_date") >= _to_date_str(start_date)
-                )
-            if end_date:
-                ind = ind.filter(F.to_date("trade_date") <= end)
-            return ind.orderBy("symbol", "trade_date").toPandas()
-        bars = self._bars(securities, fq="post", end=end)
-        ind = compute_indicators(bars)
+        else:
+            ind = compute_indicators(self._bars(securities, fq="post", end=end))
+        day = F.to_date("trade_date")  # the identity on daily bars
         if start_date:
-            ind = ind.filter(F.col("trade_date") >= _to_date_str(start_date))
-        if end_date:
-            ind = ind.filter(F.col("trade_date") <= F.lit(end))
+            ind = ind.filter(day >= _to_date_str(start_date))
+        if end:
+            ind = ind.filter(day <= end)
         return ind.orderBy("symbol", "trade_date").toPandas()
 
     def get_MACD(self, security, **kw) -> pd.DataFrame:

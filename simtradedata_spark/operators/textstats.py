@@ -71,13 +71,6 @@ def char_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def stopword_ratio(text_col: Column | str, lang: str = "en") -> Column:
-    toks = tokens(text_col)
-    sw = F.array(*[F.lit(w) for w in STOPWORDS[lang]])
-    hits = F.size(F.filter(toks, lambda t: F.array_contains(sw, t)))
-    return F.when(F.size(toks) > 0, hits / F.size(toks)).otherwise(F.lit(0.0))
-
-
 def detect_language_from(toks: Column) -> Column:
     """Stopword-vote language ID over a MATERIALIZED token-array column: the
     language whose stopword list hits the most tokens; ties go to dict order;

@@ -1484,8 +1484,8 @@ def _small_market(spark):
 # Materialized-bars cache (session-scoped): ~15 market queries derive from
 # the same 2389-row bars table; regenerating it per query re-runs the
 # calendar/walk/envelope pipeline every time. localCheckpoint once — the
-# same materialized-table pattern a warehouse uses (cf. tables.py::
-# materialize_adjusted). q_synthetic_bars deliberately bypasses this so the
+# memo dies with its session, so unlike a second stored table it cannot go
+# stale against its source. q_synthetic_bars deliberately bypasses this so the
 # generation pipeline itself stays exercised and oracle-checked.
 _MARKET_BARS_MEMO: dict[str, object] = {}
 

@@ -4,11 +4,10 @@ per-symbol HDF5 keys (``h5_writer.py`` K1-K6, SURVEY §2.2).
 Layout decisions (designed for 100 TB, exercised locally), each stated once:
   - ``GRAIN`` maps every fact table to its partition column, derived from
     ``trade_date`` by ``_grain_value``. Dailies (``bars``, ``valuation``,
-    ``adjust_factor``, ``stock_status`` and the materialized ``bars_pre``/
-    ``bars_post``) are partitioned by ``trade_year`` — date-range queries
-    prune whole directories; within a partition, files are written sorted
-    by (symbol, trade_date) so min/max parquet stats make symbol
-    predicates effective too.
+    ``adjust_factor``, ``stock_status``) are partitioned by ``trade_year``
+    — date-range queries prune whole directories; within a partition,
+    files are written sorted by (symbol, trade_date) so min/max parquet
+    stats make symbol predicates effective too.
   - ``ticks``/``minute_bars`` are partitioned by ``trade_month`` (derived
     int yyyymm): intraday tables are ~2 orders of magnitude denser per day
     than the dailies, and the incremental ingest rebuilds whole partitions —
@@ -23,6 +22,10 @@ Layout decisions (designed for 100 TB, exercised locally), each stated once:
     rename-aside swap (``_swap``) over one staging name (``_staging``),
     and one sweep (``_sweep``) finishes or drops what a crash left behind.
   - ``compression`` inherits the session's zstd default (K1's blosc-9 analog).
+  - one stored table per bar read: daily bars live only in ``bars`` and
+    intraday bars only in ``minute_bars``. Adjusted prices are derived on
+    read from ``bars``/``minute_bars`` and ``adjust_factor``, never stored
+    beside them, so a rebuild of those tables is all a reader ever sees.
 """
 
 from __future__ import annotations
@@ -36,8 +39,6 @@ from pyspark.sql import functions as F
 
 GRAIN = {
     "bars": "trade_year",
-    "bars_pre": "trade_year",
-    "bars_post": "trade_year",
     "valuation": "trade_year",
     "adjust_factor": "trade_year",
     "stock_status": "trade_year",
@@ -331,7 +332,10 @@ def build_warehouse(
     """Generate the full synthetic market and persist every table — the
     engine-side replacement for scripts/download_efficient.py (§3.1).
     Pass a ``warehouse`` instance (e.g. ``ZOrderWarehouse``) to choose the
-    file layout inside each partition; the partition grain is ``GRAIN``."""
+    file layout inside each partition; the partition grain is ``GRAIN``.
+    The bar tables it writes, ``bars`` and ``minute_bars``, are the only
+    sources of PTrade bar reads: adjusted prices come from them and
+    ``adjust_factor`` on read, so nothing derived from them is stored."""
     from simtradedata_spark.sources.synthetic import SyntheticMarket
 
     market = market or SyntheticMarket(spark)
@@ -434,18 +438,3 @@ class ZOrderWarehouse(Warehouse):
             .drop("__z", "__sx")
         )
 
-
-def materialize_adjusted(wh: Warehouse) -> None:
-    """Persist pre/post-adjusted bars as first-class tables — the engine-side
-    analog of the reference's pre-adjusted HDF5 cache
-    (``utils/paths.py:46`` ADJ_PRE_CACHE_PATH). ``PTradeDataAPI`` uses these
-    transparently when present, turning every ``get_price(fq=...)`` from a
-    bars ⋈ adjust_factor join into a pruned scan. Refresh by re-running after
-    new exrights land (adjustment factors rewrite history by design, so the
-    materialization is a full rewrite of affected symbols, not an append)."""
-    from simtradedata_spark.operators.adjust import adjust_bars
-
-    bars = wh.read("bars")
-    af = wh.read("adjust_factor")
-    for fq in ("pre", "post"):
-        wh.write(f"bars_{fq}", adjust_bars(bars, af, fq))

@@ -178,6 +178,34 @@ def test_connected_components_chain_and_triangle(spark):
     assert all(r["cluster_id"] == comp[r["doc_id"]] for r in clusters)
 
 
+def test_connected_components_rounds_materialize_their_checkpoints(spark):
+    """Each propagation round's lazy localCheckpoint is fully materialized
+    by that round's changed-count, before the next round's two joins read
+    it: right after connected_components returns, before any other action,
+    every RDD it persisted has all its partitions cached. A long chain cut
+    off by ``max_iter`` still changes labels in the last round. (Spark
+    fills a local checkpoint's missing partitions after the first job that
+    reads it, so a take in place of the count still passes; a round with no
+    action at all does not.)"""
+    from simtradedata_spark.functions.caching import snapshot
+    from simtradedata_spark.operators.graph import connected_components
+
+    edges = spark.range(63).select(
+        F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
+    )
+    before = snapshot(spark)
+    connected_components(edges, max_iter=4)
+    jsc = spark.sparkContext._jsc
+    # storage first: an RDD still persistent after this read had its
+    # blocks in place during it
+    cached = {i.id(): i.numCachedPartitions() for i in jsc.sc().getRDDStorageInfo()}
+    rdds = jsc.getPersistentRDDs()
+    new = [k for k in rdds.keySet().toArray() if int(k) not in before]
+    assert len(new) == 5, new  # sym, the init labels, 3 rounds
+    for k in new:
+        assert cached.get(int(k), 0) == rdds.get(k).getNumPartitions(), k
+
+
 def test_chunk_documents_edges(spark):
     """Chunk boundaries: short doc -> one chunk; exact-multiple lengths;
     overlap reconstruction (consecutive chunks share `overlap` tokens)."""

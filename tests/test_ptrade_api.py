@@ -284,30 +284,60 @@ def test_get_price_monthly_count_mode(api):
     assert [str(i)[:7] for i in got.index] == ["2022-10", "2022-11", "2022-12"]
 
 
-def test_materialized_adjusted_cache(api, warehouse, spark):
+def test_leftover_adjusted_tables_are_ignored(warehouse, spark, tmp_path):
+    """Adjusted bars are derived on every read from the current ``bars`` and
+    ``adjust_factor``: ``bars_pre``/``bars_post`` directories in the
+    warehouse (stored by an older layout, and left stale by a rebuild of
+    ``bars``) change no answer, on a plain or a fully cached client."""
     from simtradedata_spark.api.ptrade import PTradeDataAPI
-    from simtradedata_spark.sources.tables import materialize_adjusted
+    from simtradedata_spark.operators.adjust import adjust_bars
+    from simtradedata_spark.sources.tables import Warehouse
 
-    on_the_fly = api.get_price("600000.SS", "2022-01-04", "2022-12-30", fq="post")
-    materialize_adjusted(warehouse)
-    try:
-        cached_api = PTradeDataAPI(warehouse)
-        assert cached_api._has_table("bars_post")
-        # daily grain, so the cached read is a partition-pruned scan
-        for fq in ("pre", "post"):
-            assert any(
-                d.startswith("trade_year=")
-                for d in os.listdir(warehouse.path(f"bars_{fq}"))
-            ), fq
-        cached = cached_api.get_price(
-            "600000.SS", "2022-01-04", "2022-12-30", fq="post"
+    sym = "600000.SS"  # has exrights, so pre/post differ from raw
+    tw = Warehouse(spark, str(tmp_path / "wh"))
+    for t in ("bars", "adjust_factor"):
+        tw.write(t, warehouse.read(t).filter(F.col("symbol") == sym))
+    bars, af = tw.read("bars"), tw.read("adjust_factor")
+    for fq in ("pre", "post"):
+        stale = adjust_bars(bars, af, fq).withColumn("close", F.col("close") * 10)
+        stale.withColumn("trade_year", F.year("trade_date")).write.partitionBy(
+            "trade_year"
+        ).parquet(tw.path(f"bars_{fq}"))
+    fields = ["open", "high", "low", "close", "volume", "money"]
+    clients = [PTradeDataAPI(tw), PTradeDataAPI(tw, cache_tables=True, point_cache=True)]
+    for fq in ("pre", "post"):
+        want = (
+            adjust_bars(bars, af, fq)
+            .filter(F.col("trade_date").between("2022-01-04", "2022-12-30"))
+            .select("trade_date", *fields)
+            .orderBy("trade_date")
+            .toPandas()
+            .set_index("trade_date")
         )
-        pd.testing.assert_frame_equal(cached, on_the_fly)
-    finally:
-        import shutil
+        for client in clients:
+            got = client.get_price(sym, "2022-01-04", "2022-12-30", fq=fq)
+            pd.testing.assert_frame_equal(got, want)
 
-        for fq in ("pre", "post"):
-            shutil.rmtree(warehouse.path(f"bars_{fq}"), ignore_errors=True)
+
+@pytest.mark.parametrize("point_cache", [False, True])
+def test_unknown_fq_fails_loudly(warehouse, point_cache):
+    """An ``fq`` outside None/'none'/'pre'/'post' raises ValueError on
+    every bar read, daily and minute, instead of silently returning raw
+    prices, and leaves nothing in the point cache."""
+    from simtradedata_spark.api.ptrade import PTradeDataAPI
+
+    api = PTradeDataAPI(warehouse, point_cache=point_cache)
+    sym, day = "600000.SS", "2022-03-01"
+    calls = [
+        lambda: api.get_price(sym, "2022-02-01", day, fq="qfq"),
+        lambda: api.get_price(sym, end_date=day, frequency="5m", count=10, fq="qfq"),
+        lambda: api.get_history(5, "1d", "close", [sym], fq="hfq", current_date=day),
+        lambda: api.get_history(5, "1m", "close", [sym], fq="Pre", current_date=day),
+    ]
+    for call in calls:
+        with pytest.raises(ValueError, match="fq"):
+            call()
+    assert api._point_rows == {}
 
 
 def test_get_sort_msg_industry_ranking(api, warehouse):
