@@ -1,7 +1,6 @@
 """PTrade query API surface (SURVEY §2.12) against the synthetic warehouse."""
 
 import datetime as _dt
-import os
 
 import pandas as pd
 import pytest
