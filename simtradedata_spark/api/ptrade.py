@@ -19,6 +19,7 @@ from __future__ import annotations
 import hashlib
 from datetime import date as _date
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame
@@ -168,6 +169,86 @@ def _as_to_pandas(parts: list[pd.DataFrame], schema: StructType) -> pd.DataFrame
     return pdf
 
 
+def _iso_day(s: str) -> _date | None:
+    """``s`` as a date when it is a plain ISO day (YYYY-MM-DD), else None."""
+    try:
+        day = _date.fromisoformat(s)
+    except ValueError:
+        return None
+    return day if day.isoformat() == s else None
+
+
+def _period_start(days: np.ndarray, freq: str) -> np.ndarray:
+    """``resample_ohlc``'s bucket (``date_trunc``) of datetime64[D] days:
+    the Monday, or the first day of the month, quarter or year."""
+    if freq == "W":  # day 0, 1970-01-01, was a Thursday
+        return days - (days.astype("int64") + 3) % 7
+    if freq == "Y":
+        return days.astype("datetime64[Y]").astype("datetime64[D]")
+    month = days.astype("datetime64[M]")
+    if freq == "Q":
+        month = month - month.astype("int64") % 3
+    return month.astype("datetime64[D]")
+
+
+def _periods_back(d: pd.Series, hi: int, count: int, freq: str) -> int:
+    """First row of the last ``count`` periods among the ascending date
+    strings ``d[:hi]``: step back one period start at a time."""
+    lo = hi
+    for _ in range(max(count, 0)):
+        if not lo:
+            break
+        first = _period_start(np.array([d.iat[lo - 1]], "datetime64[D]"), freq)[0]
+        lo = int(d.searchsorted(str(first)))
+    return lo
+
+
+def _fold_periods(parts: list[pd.DataFrame], freq: str, schema: StructType) -> pd.DataFrame:
+    """``resample_ohlc`` over point-cache daily slices (each one symbol's
+    rows in date order, no NaN in ``BAR_FIELDS``), as ``toPandas`` returns
+    it: ``trade_date`` is the period start (a ``datetime.date``), open the
+    first row's and close the last row's, high the max, low the min,
+    volume and money sums (long over an integral column), ``n_bars`` the
+    row count.
+
+    Spark's Sum adds a partition's rows left to right, and a ``bars``
+    scan partition holds one ``trade_year`` in date order; so each sum
+    here adds left to right (a row-wise cumsum, not pandas' compensated
+    or numpy's pairwise sum). A period inside one year matches to the
+    bit; one spanning a year boundary (a late-December week) is two
+    partial sums added in Spark, so there parity holds up to that
+    association."""
+    pdf = pd.concat(parts, ignore_index=True)
+    n = len(pdf)
+    sym = pdf["symbol"].to_numpy()
+    per = _period_start(pdf["__d"].to_numpy().astype("datetime64[D]"), freq)
+    new = np.ones(n, bool)  # the row starts a (symbol, period) group
+    new[1:] = (per[1:] != per[:-1]) | (sym[1:] != sym[:-1])
+    ends = np.ones(n, bool)  # the row ends one
+    ends[:-1] = new[1:]
+    first, last = np.flatnonzero(new), np.flatnonzero(ends)
+    g = np.cumsum(new) - 1
+    pos = np.arange(n) - first[g]
+
+    def total(col):
+        integral = type(schema[col].dataType) in _INT_DTYPES
+        m = np.zeros((len(first), int(pos.max(initial=0)) + 1), "int64" if integral else "float64")
+        m[g, pos] = pdf[col].to_numpy(m.dtype)
+        return m.cumsum(axis=1)[:, -1]
+
+    return pd.DataFrame({
+        "symbol": sym[first],
+        "trade_date": per[first].astype(object),
+        "open": pdf["open"].to_numpy()[first],
+        "high": np.maximum.reduceat(pdf["high"].to_numpy(), first),
+        "low": np.minimum.reduceat(pdf["low"].to_numpy(), first),
+        "close": pdf["close"].to_numpy()[last],
+        "volume": total("volume"),
+        "money": total("money"),
+        "n_bars": last - first + 1,
+    })
+
+
 def _minute_ts() -> Column:
     """bar timestamp = trade_date + bar_time (hhmm) as a real timestamp."""
     return F.to_timestamp(
@@ -200,18 +281,25 @@ class PTradeDataAPI:
     - ``get_price`` / ``get_history`` at daily and minute frequencies for
       stored bar fields (``BAR_FIELDS`` daily, ``MINUTE_FIELDS`` minute),
       kind ``"bars"`` under that fq and width;
+    - the resampled frequencies (``1w``/``1M``/``1q``/``1y``), folded in
+      pandas from the cached daily rows;
+    - daily ``fill='pre'`` when the rows it would fill hold no NaN;
     - ``get_fundamentals(table='valuation')``: the last row on or before
       ``date`` (the last row without one);
     - ``get_stock_status`` for ``'ST'`` and ``'HALT'``: the row on exactly
       ``query_date``, a missing row or null flag meaning False (the last
-      row without a date).
+      row without a date);
+    - ``get_Ashares``, from one memo of the listing dates.
 
-    Answers equal the Spark path's in values, dtypes and index. Resampled
-    frequencies, other daily bar columns, ``fill='pre'`` (pandas cannot
-    tell a stored NaN from a null), ``'DELISTING'`` and the other
-    fundamentals tables stay on Spark. Per-symbol history is a few
-    thousand daily (a few 10k minute) rows; the 100 TB answer remains the
-    vectorized batch path."""
+    Answers equal the Spark path's in values, dtypes and index. Minute
+    ``fill='pre'`` (it needs the session grid), other daily bar columns,
+    ``'DELISTING'``, the other fundamentals tables, and any bar read whose
+    rows hold a NaN (pandas cannot tell a stored NaN from a null, which
+    Spark treats apart) stay on Spark. The point cache and the listing
+    memo are a snapshot taken at first use: after a rebuild of the
+    warehouse, build a new client, as with ``cache_tables``. Per-symbol
+    history is a few thousand daily (a few 10k minute) rows; the 100 TB
+    answer remains the vectorized batch path."""
 
     def __init__(
         self,
@@ -225,6 +313,7 @@ class PTradeDataAPI:
         self._cached: dict[str, DataFrame] = {}
         self._trade_days: list[str] | None = None
         self._point_cache = point_cache
+        self._listings: list | None = None  # see get_Ashares
         # (kind, symbol, fq, minutes) → (rows, schema); see _point_frames
         self._point_rows: dict[
             tuple[str, str, str | None, int | None], tuple[pd.DataFrame, StructType]
@@ -311,11 +400,12 @@ class PTradeDataAPI:
         return self._adjust(bars, fq)
 
     def _adjust(self, bars: DataFrame, fq) -> DataFrame:
-        """``bars`` under ``fq``: unadjusted ``None``/``'none'`` leaves them
-        as stored without reading ``adjust_factor``; every other value goes
-        to ``adjust_bars``, which applies ``'pre'``/``'post'`` and raises
-        ValueError for anything else."""
-        if fq in (None, "none"):
+        """``bars`` under ``fq``: unadjusted None (``_bar_rows`` reads
+        ``'none'`` as None) leaves them as stored without reading
+        ``adjust_factor``; every other value goes to ``adjust_bars``, which
+        applies ``'pre'``/``'post'`` and raises ValueError for anything
+        else."""
+        if fq is None:
             return bars
         return adjust_bars(bars, self._table("adjust_factor"), fq)
 
@@ -424,39 +514,75 @@ class PTradeDataAPI:
         ``freq`` is a ``_FREQUENCIES`` value; minute rows carry the full
         bar timestamp in ``trade_date``. Range mode (``count`` None) keeps
         start <= day <= end. Count mode keeps each symbol's last ``count``
-        bars on or before ``end`` when ``end_inclusive``, strictly before
-        it otherwise. ``fill='pre'`` forward-fills daily bars (W2) and
-        densifies minute bars to the session grid.
+        bars (periods, when resampled) on or before ``end`` when
+        ``end_inclusive``, strictly before it otherwise. ``fill='pre'``
+        forward-fills daily bars (W2) and densifies minute bars to the
+        session grid. ``fq`` ``'none'`` is read as None.
 
-        With ``point_cache`` on, daily and minute reads of stored bar
-        fields without ``fill='pre'`` slice the cached per-symbol history,
-        which ``_point_frames`` pulls through ``_bar_query``. ``fill='pre'``
-        needs the Spark forward-fill or session grid, and resampled bars
-        fold from daily on Spark, so both stay there."""
+        With ``point_cache`` on, the answer comes from ``_cached_bar_rows``
+        for stored bar fields at daily and minute width and for every
+        resampled frequency (folded from the cached daily rows), except
+        minute ``fill='pre'``, which needs the Spark session grid."""
+        fq = None if fq == "none" else fq  # one cache entry per unadjusted history
         minutes = freq[1] if isinstance(freq, tuple) else None
         stored = MINUTE_FIELDS if minutes else BAR_FIELDS
         if (
-            self._point_cache and securities and fill != "pre"
-            and not isinstance(freq, str) and set(fields) <= set(stored)
+            self._point_cache and securities and not (minutes and fill == "pre")
+            and (isinstance(freq, str) or set(fields) <= set(stored))
         ):
-            parts = []
-            for rows, schema in self._point_frames("bars", securities, fq, minutes):
-                d = rows["__d"]  # in date order: bound by binary search
-                if count is None:
-                    lo = d.searchsorted(start) if start else 0
-                    hi = d.searchsorted(end, "right") if end else len(rows)
-                else:
-                    hi = d.searchsorted(end, "right" if end_inclusive else "left") if end else len(rows)
-                    lo = max(hi - count, 0)
-                parts.append(rows.iloc[lo:hi])
-            return (
-                _as_to_pandas(parts, schema)
-                .sort_values(["trade_date", "symbol"], kind="mergesort")
-                .reset_index(drop=True)[["symbol", "trade_date", *fields]]
+            pdf = self._cached_bar_rows(
+                securities, fields, fq, freq, start, end, count, end_inclusive, fill
             )
+            if pdf is not None:
+                return pdf
         return self._bar_query(
             securities, fields, fq, freq, start, end, count, end_inclusive, fill
         ).orderBy("trade_date", "symbol").toPandas()
+
+    def _cached_bar_rows(
+        self, securities, fields, fq, freq, start, end, count, end_inclusive, fill,
+    ) -> pd.DataFrame | None:
+        """``_bar_rows`` from the per-symbol histories ``_point_frames``
+        pulls through ``_bar_query``: each symbol's rows are sliced by
+        binary search on the date, and resampled reads fold the daily
+        slice with ``_fold_periods``. Daily ``fill='pre'`` answers with the
+        unfilled slice: Spark's forward fill replaces only nulls, so it is
+        the identity over rows that hold none.
+
+        toPandas maps null and NaN alike to NaN, while Spark tells them
+        apart (the forward fill fills null only; max/min order NaN above
+        every value; sum skips null but propagates NaN; min_by can return
+        a null open). So when a row the answer reads holds a NaN (the
+        resample's ``BAR_FIELDS`` over the slice, or ``fill='pre'``'s
+        fields over the rows up to the end bound) this returns None and
+        the whole call goes to Spark."""
+        minutes = freq[1] if isinstance(freq, tuple) else None
+        resampled = isinstance(freq, str)
+        parts = []
+        for rows, schema in self._point_frames(
+            "bars", list(dict.fromkeys(securities)), fq, minutes
+        ):
+            d = rows["__d"]  # in date order: bound by binary search
+            if count is None:
+                lo = d.searchsorted(start) if start else 0
+                hi = d.searchsorted(end, "right") if end else len(rows)
+            else:
+                hi = d.searchsorted(end, "right" if end_inclusive else "left") if end else len(rows)
+                lo = _periods_back(d, hi, count, freq) if resampled else max(hi - count, 0)
+            parts.append(rows.iloc[lo:hi])
+            if resampled:
+                read = parts[-1][BAR_FIELDS]
+            elif fill == "pre":
+                read = rows.iloc[:hi][fields]
+            else:
+                continue
+            if read.isna().to_numpy().any():
+                return None
+        pdf = _fold_periods(parts, freq, schema) if resampled else _as_to_pandas(parts, schema)
+        return (
+            pdf.sort_values(["trade_date", "symbol"], kind="mergesort")
+            .reset_index(drop=True)[["symbol", "trade_date", *fields]]
+        )
 
     def _bar_query(
         self, securities, fields, fq, freq, start=None, end=None, count=None,
@@ -590,10 +716,32 @@ class PTradeDataAPI:
 
     def get_Ashares(self, date=None) -> list[str]:
         """Point-in-time universe (``ptrade_data_api.py:109-141``): listed on
-        or before ``date``, not yet delisted, excluding the benchmark index."""
+        or before ``date``, not yet delisted, excluding the benchmark index.
+        A null ``listed_date`` selects nothing.
+
+        With ``point_cache`` on, the same rule filters one memo of
+        stock_metadata's (symbol, listed_date, de_listed_date) rows, pulled
+        on first use. A ``date`` that is not a plain ISO day goes to Spark,
+        which casts it to a date as the column comparison does and raises
+        on a malformed one."""
+        d = _to_date_str(date) if date else None
+        day = _iso_day(d) if d else None
+        if self._point_cache and (d is None or day):
+            if self._listings is None:
+                self._listings = (
+                    self._table("stock_metadata")
+                    .select("symbol", "listed_date", "de_listed_date")
+                    .collect()
+                )
+            return sorted(
+                sym for sym, listed, delisted in self._listings
+                if d is None or (
+                    listed is not None and listed <= day
+                    and (delisted is None or delisted > day)
+                )
+            )
         meta = self._table("stock_metadata")
-        if date:
-            d = _to_date_str(date)
+        if d:
             meta = meta.filter(
                 (F.col("listed_date") <= d)
                 & (

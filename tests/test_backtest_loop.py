@@ -104,7 +104,7 @@ def test_minute_backtest_loop_matches_batch_signals(warehouse):
 def _assert_same(a, b):
     assert type(a) is type(b)
     if isinstance(a, pd.DataFrame):
-        pd.testing.assert_frame_equal(a, b)
+        pd.testing.assert_frame_equal(a, b, check_exact=True)
     elif isinstance(a, dict):
         assert a.keys() == b.keys()
         for k in a:
@@ -119,10 +119,11 @@ def test_backtest_day_cached_client_equals_plain_client(warehouse):
     pre-adjusted get_price and a forward-filled history) stepped over 10
     days on a plain client and on the backtest client (cache_tables and
     point_cache). Every answer is equal. The universe gains two symbols at
-    the rebalance, and after the first day the cached client's daily calls
-    run at most one Spark job per table: the one fill that pulls both new
-    symbols. Jobs are counted by the DAGScheduler id range, as
-    runner.run_query does."""
+    the first rebalance, and after the first day the cached client's daily
+    calls run at most one Spark job per table: the one fill that pulls
+    both new symbols. On the second rebalance, over the same universe, its
+    three rebalance calls run no Spark job at all. Jobs are counted by the
+    DAGScheduler id range, as runner.run_query does."""
     from simtradedata_spark.api.ptrade import PTradeDataAPI
     from simtradedata_spark.runner import _next_ids
 
@@ -130,7 +131,7 @@ def test_backtest_day_cached_client_equals_plain_client(warehouse):
     cached = PTradeDataAPI(warehouse, cache_tables=True, point_cache=True)
     days = plain.get_trade_days("2022-08-15", "2022-12-31")[:10]
     uni = ["600000.SS", "000001.SZ", "600002.SS", "000003.SZ", "000005.SZ"]
-    rebalance = 4
+    rebalances = (4, 8)
     daily = {
         "get_history": lambda api, d: api.get_history(
             LONG_N, "1d", "close", uni, current_date=d
@@ -141,19 +142,26 @@ def test_backtest_day_cached_client_equals_plain_client(warehouse):
         ),
     }
     jobs = dict.fromkeys(daily, 0)
+    rebalance_jobs = {}
     for i, d in enumerate(days):
-        if i == rebalance:
-            uni = uni + ["600004.SS", "000009.SZ"]
-            _assert_same(cached.get_Ashares(d), plain.get_Ashares(d))
-            start = days[i - rebalance]
-            _assert_same(
-                cached.get_price(uni, start, d, frequency="1w", fq="pre"),
-                plain.get_price(uni, start, d, frequency="1w", fq="pre"),
-            )
-            _assert_same(
-                cached.get_history(LONG_N, "1d", "close", uni, fill="pre", current_date=d),
-                plain.get_history(LONG_N, "1d", "close", uni, fill="pre", current_date=d),
-            )
+        if i in rebalances:
+            if i == rebalances[0]:
+                uni = uni + ["600004.SS", "000009.SZ"]
+            start = days[i - 4]
+            for name, call in {
+                "get_Ashares": lambda api: api.get_Ashares(d),
+                "get_price": lambda api: api.get_price(
+                    uni, start, d, frequency="1w", fq="pre"
+                ),
+                "get_history": lambda api: api.get_history(
+                    LONG_N, "1d", "close", uni, fill="pre", current_date=d
+                ),
+            }.items():
+                want = call(plain)
+                jobs0 = _next_ids(warehouse.spark)[0]
+                got = call(cached)
+                rebalance_jobs[name] = _next_ids(warehouse.spark)[0] - jobs0
+                _assert_same(got, want)
         for name, call in daily.items():
             want = call(plain, d)
             jobs0 = _next_ids(warehouse.spark)[0]
@@ -162,3 +170,5 @@ def test_backtest_day_cached_client_equals_plain_client(warehouse):
                 jobs[name] += _next_ids(warehouse.spark)[0] - jobs0
             _assert_same(got, want)
     assert all(n <= 1 for n in jobs.values()), jobs
+    # the last rebalance's counts: a warm rebalance day runs no Spark job
+    assert rebalance_jobs == dict.fromkeys(rebalance_jobs, 0), rebalance_jobs

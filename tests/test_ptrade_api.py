@@ -604,6 +604,9 @@ def test_point_cache_parity_and_no_spark_after_warm(api, warehouse):
         dict(security=sym, start_date="2022-03-01", end_date="2022-03-31", fq="post"),
         dict(security=[sym, sym2], start_date="2022-03-01", end_date="2022-03-15",
              fields=["close"]),
+        # a repeated symbol is read once, as Spark's isin reads it
+        dict(security=[sym, sym2, sym], start_date="2022-03-01",
+             end_date="2022-03-15", fields=["close"]),
     ]
     for kw in cases:
         a = api.get_price(**kw)
@@ -618,13 +621,17 @@ def test_point_cache_parity_and_no_spark_after_warm(api, warehouse):
     got = pc.get_price(sym, start_date="2022-05-01", end_date="2022-05-31")
     want = api.get_price(sym, start_date="2022-05-01", end_date="2022-05-31")
     pd.testing.assert_frame_equal(got, want)
-    # resampled/minute frequencies and non-bar fields still go to Spark:
-    # the cache must NOT have hijacked them
-    import pytest as _pytest
-
-    with _pytest.raises(TypeError):
+    # a resampled frequency folds the warm daily rows without Spark
+    got = pc.get_price(sym, start_date="2022-05-01", end_date="2022-05-31",
+                       frequency="1w")
+    want = api.get_price(sym, start_date="2022-05-01", end_date="2022-05-31",
+                         frequency="1w")
+    pd.testing.assert_frame_equal(got, want, check_exact=True)
+    # a daily column outside BAR_FIELDS still goes to Spark: the cache
+    # must NOT have hijacked it
+    with pytest.raises(TypeError):
         pc.get_price(sym, start_date="2022-05-01", end_date="2022-05-31",
-                     frequency="1w")
+                     fields=["preclose"])
 
 
 # -- minute frequency (spec :521-694 minute mode) --------------------------
@@ -802,32 +809,196 @@ def test_point_cache_get_history_parity(warehouse):
         dict(count=9, frequency="30m", field=["close", "vwap"],
              security_list="000001.SZ", current_date="2022-06-15",
              include=True),
-        # the cases that stay on Spark: fill='pre', a resampled frequency,
-        # a daily field outside BAR_FIELDS
+        # daily fill='pre' over rows without NaN and a resampled
+        # frequency, both served from the cache
         dict(count=10, field=["close", "volume"],
              security_list=["600000.SS", "000003.SZ"],
              current_date="2022-06-15", fill="pre"),
+        dict(count=4, frequency="1w", field=["close", "n_bars"],
+             security_list="600000.SS", current_date="2022-06-15"),
+        # the cases that stay on Spark: minute fill='pre', a daily field
+        # outside BAR_FIELDS
         dict(count=30, frequency="1m", field="close",
              security_list="000003.SZ", current_date="2022-06-15",
              fill="pre"),
-        dict(count=4, frequency="1w", field=["close", "n_bars"],
-             security_list="600000.SS", current_date="2022-06-15"),
         dict(count=6, field="preclose", security_list="600000.SS",
              current_date="2022-06-15"),
     ]
     for kw in cases:
-        a, b = slow.get_history(**kw), fast.get_history(**kw)
-        if isinstance(a, dict):
-            assert a.keys() == b.keys()
-            for k in a:
-                pd.testing.assert_frame_equal(a[k], b[k])
-        else:
-            pd.testing.assert_frame_equal(a, b)
+        _assert_same_answer(slow.get_history(**kw), fast.get_history(**kw))
     d1 = slow.get_history(5, field="close", security_list=["600000.SS"],
                           current_date="2022-06-15", is_dict=True)
     d2 = fast.get_history(5, field="close", security_list=["600000.SS"],
                           current_date="2022-06-15", is_dict=True)
     pd.testing.assert_frame_equal(d1["600000.SS"], d2["600000.SS"])
+
+
+def _assert_same_answer(a, b):
+    """Equal PTrade answers (a frame or a dict of frames), to the bit."""
+    assert type(a) is type(b)
+    if isinstance(a, dict):
+        assert a.keys() == b.keys()
+        for k in a:
+            pd.testing.assert_frame_equal(a[k], b[k], check_exact=True)
+    else:
+        pd.testing.assert_frame_equal(a, b, check_exact=True)
+
+
+def test_point_cache_resampled_parity(warehouse):
+    """Weekly, monthly, quarterly and yearly bars folded from the point
+    cache's daily rows equal the Spark resample to the bit: get_price range
+    and count mode, get_history with ``include`` both ways, fq None, pre
+    and post, single- and multi-symbol shapes with ``n_bars``, an unknown
+    symbol, a window before 000005.SZ lists, an empty range and a repeated
+    symbol. Once warm, the same calls run with the Spark path severed."""
+    from simtradedata_spark.api.ptrade import PTradeDataAPI
+
+    slow = PTradeDataAPI(warehouse)
+    fast = PTradeDataAPI(warehouse, point_cache=True)
+    multi = ["600000.SS", "000003.SZ", "000005.SZ"]
+    price = [
+        dict(security=multi, start_date="2022-03-09", end_date="2022-08-17",
+             frequency="1w", fq="pre", fields=["close"]),
+        dict(security="600000.SS", start_date="2022-01-01", end_date="2023-06-30",
+             frequency="1M", fq="post"),
+        dict(security=multi, start_date="2022-02-10", end_date="2023-11-20",
+             frequency="1q", fields=["open", "high", "low", "n_bars"]),
+        dict(security=multi, start_date="2022-05-05", end_date="2023-12-31",
+             frequency="1y", fq="pre"),
+        dict(security=multi, end_date="2023-03-15", count=5, frequency="1w",
+             fields=["volume", "money", "n_bars"]),
+        dict(security="000003.SZ", end_date="2023-02-01", count=3,
+             frequency="1M", fq="pre"),
+        dict(security=multi, end_date="2023-10-10", count=2, frequency="1q",
+             fq="post", fields=["close", "n_bars"]),
+        dict(security="600000.SS", end_date="2023-05-01", count=4,
+             frequency="1y"),
+        dict(security=["600000.SS", "NOPE.SZ"], start_date="2022-03-01",
+             end_date="2022-04-30", frequency="1w", fields=["close"]),
+        dict(security="NOPE.SZ", start_date="2022-03-01",
+             end_date="2022-04-30", frequency="1M"),
+        dict(security="000005.SZ", start_date="2022-01-01",
+             end_date="2022-02-28", frequency="1w", fq="pre"),
+        dict(security=multi, start_date="2022-06-18", end_date="2022-06-19",
+             frequency="1w", fields=["close"]),
+        dict(security=["600000.SS", "600000.SS"], start_date="2022-03-01",
+             end_date="2022-05-31", frequency="1M", fields=["close"]),
+    ]
+    history = [
+        dict(count=6, frequency="1w", field=["close", "n_bars"],
+             security_list=multi, current_date="2022-11-16", fq="pre"),
+        dict(count=6, frequency="1w", field=["close", "n_bars"],
+             security_list=multi, current_date="2022-11-16", fq="pre",
+             include=True),
+        dict(count=3, frequency="1M", field="close",
+             security_list="000005.SZ", current_date="2022-12-01",
+             include=True, fq="post", fill="pre"),
+        dict(count=2, frequency="1q", field=["open", "volume"],
+             security_list=multi, current_date="2023-07-03", is_dict=True),
+        dict(count=2, frequency="1y", field="money",
+             security_list=multi, current_date="2023-01-03"),
+    ]
+    calls = [("get_price", kw) for kw in price] + [("get_history", kw) for kw in history]
+    for name, kw in calls:
+        _assert_same_answer(getattr(fast, name)(**kw), getattr(slow, name)(**kw))
+    fast._bars = None  # any further Spark bar read raises TypeError
+    for name, kw in calls:
+        _assert_same_answer(getattr(fast, name)(**kw), getattr(slow, name)(**kw))
+
+
+def _gappy_bars(spark, tmp_path):
+    """A tmp warehouse over three weeks: 600009.SS with a null close on
+    days 3-4, 600010.SS with a stored NaN close on day 5, 600011.SS with
+    no gap. ``volume`` is a long column."""
+    from simtradedata_spark.sources.tables import Warehouse
+
+    base = _dt.date(2022, 3, 7)  # a Monday
+    rows = []
+    for sym, gap, bad in (("600009.SS", (3, 4), None), ("600010.SS", (5,), float("nan")),
+                          ("600011.SS", (), None)):
+        for i in range(19):
+            px = bad if i in gap else 10.0 + i * 0.37
+            rows.append((sym, base + _dt.timedelta(days=i), px, px, px, px,
+                         100 + i, 1000.1 * (i + 1)))
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    wh.write("bars", spark.createDataFrame(
+        rows,
+        "symbol string, trade_date date, open double, high double,"
+        " low double, close double, volume long, money double",
+    ))
+    return wh, base
+
+
+def test_point_cache_nan_or_null_rows_go_to_spark(spark, tmp_path):
+    """toPandas reads a null and a stored NaN both as NaN, and Spark treats
+    them apart: the forward fill fills only the null, max/min/sum and the
+    weekly open/close differ between the two. A point-cache read whose
+    rows hold either must answer as the Spark path does; rows without one
+    are served from the cache (long ``volume`` sums stay int64)."""
+    from simtradedata_spark.api.ptrade import PTradeDataAPI
+
+    wh, base = _gappy_bars(spark, tmp_path)
+    slow, fast = PTradeDataAPI(wh), PTradeDataAPI(wh, point_cache=True)
+    end = str(base + _dt.timedelta(days=19))
+    syms = ["600009.SS", "600010.SS", "600011.SS"]
+    for sec in (syms, *syms):
+        for call in (
+            lambda api: api.get_history(19, "1d", ["close", "high"], sec,
+                                        fill="pre", current_date=end),
+            lambda api: api.get_history(3, "1w", ["close", "n_bars"], sec,
+                                        fill="pre", current_date=end),
+            lambda api: api.get_price(sec, str(base), end, frequency="1w"),
+        ):
+            _assert_same_answer(call(fast), call(slow))
+    filled = fast.get_history(19, "1d", "close", "600009.SS", fill="pre",
+                              current_date=end)
+    assert filled["close"].notna().all()  # the Spark forward fill ran
+    weekly = fast.get_price("600011.SS", str(base), end, frequency="1w")
+    assert weekly["volume"].dtype == "int64" and len(weekly) == 3
+
+
+def test_point_cache_get_ashares_parity(warehouse):
+    """get_Ashares from the listing memo equals the Spark filter on every
+    listing and delisting date, a day either side, and with no date;
+    once filled, the memo answers without Spark. A date Spark would cast
+    leniently (2022-3-1) still gets Spark's answer, and a malformed one
+    raises on both clients."""
+    from simtradedata_spark.api.ptrade import PTradeDataAPI
+
+    slow = PTradeDataAPI(warehouse)
+    fast = PTradeDataAPI(warehouse, point_cache=True)
+    meta = warehouse.read("stock_metadata").select(
+        "listed_date", "de_listed_date").collect()
+    edges = {d for r in meta for d in r if d is not None}
+    dates = [None, *sorted({e + _dt.timedelta(days=k) for e in edges for k in (-1, 0, 1)})]
+    assert len(dates) >= 7  # a shared listing day, the IPO and the delisting
+    assert fast.get_Ashares("2022-3-1") == slow.get_Ashares("2022-3-1")
+    for bad in ("2022-13-01", "not-a-date"):
+        for api in (slow, fast):
+            with pytest.raises(Exception):
+                api.get_Ashares(bad)
+    fast.get_Ashares()
+    fast._table = None  # any further table read raises TypeError
+    for d in dates:
+        for arg in ((d,) if d is None else (d, d.isoformat(), d.strftime("%Y%m%d"))):
+            assert fast.get_Ashares(arg) == slow.get_Ashares(arg), arg
+    assert fast.get_Ashares("2022-01-04") != fast.get_Ashares("2023-12-29")
+
+
+def test_point_cache_one_entry_per_unadjusted_fq(warehouse):
+    """``fq='none'`` and ``fq=None`` read the same unadjusted history: the
+    second call adds no point-cache entry and runs no Spark job."""
+    from simtradedata_spark.api.ptrade import PTradeDataAPI
+    from simtradedata_spark.runner import _next_ids
+
+    fast = PTradeDataAPI(warehouse, point_cache=True)
+    a = fast.get_price("600000.SS", "2022-03-01", "2022-03-31", fq=None)
+    keys = set(fast._point_rows)
+    jobs0 = _next_ids(warehouse.spark)[0]
+    b = fast.get_price("600000.SS", "2022-03-01", "2022-03-31", fq="none")
+    assert _next_ids(warehouse.spark)[0] == jobs0
+    assert set(fast._point_rows) == keys == {("bars", "600000.SS", None, None)}
+    pd.testing.assert_frame_equal(a, b, check_exact=True)
 
 
 # -- point cache: valuation and status ------------------------------------
