@@ -18,15 +18,15 @@ from __future__ import annotations
 
 import hashlib
 from datetime import date as _date
+from datetime import timedelta
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    BooleanType, ByteType, IntegerType, LongType, ShortType, StructType,
-)
 from pyspark.sql.window import Window
 
 from simtradedata_spark.functions.lits import local_rows
@@ -114,9 +114,10 @@ FUNDAMENTAL_TABLES = {
 
 
 def _to_date_str(d) -> str:
-    if isinstance(d, _date):
-        return d.isoformat()
-    s = str(d)
+    """A date argument as the string the Spark path compares with a date
+    column: a date, datetime or ``pd.Timestamp`` cut to its day, YYYYMMDD
+    as YYYY-MM-DD, any other string's first ten characters."""
+    s = d.isoformat() if isinstance(d, _date) else str(d)
     if len(s) == 8 and s.isdigit():  # YYYYMMDD (C2)
         return f"{s[:4]}-{s[4:6]}-{s[6:]}"
     return s[:10]
@@ -146,29 +147,6 @@ def _bar_args(frequency, fields):
     return freq, fields
 
 
-# toPandas's numpy type of each integral Spark type
-_INT_DTYPES = {ByteType: "int8", ShortType: "int16", IntegerType: "int32", LongType: "int64"}
-
-
-def _as_to_pandas(parts: list[pd.DataFrame], schema: StructType) -> pd.DataFrame:
-    """Point-cache row slices joined into the frame ``toPandas`` returns
-    for the same rows. A cache frame holds a symbol's whole history, pulled
-    with other symbols, so a nullable integer or boolean column is float64
-    or object there when any of those rows is null. toPandas decides on the
-    answer's own rows (SPARK-21766): float64 or object only if one of them
-    is null, else the column's numpy type (integers below 2**53 round-trip
-    float64 exactly)."""
-    pdf = pd.concat([p for p in parts if len(p)] or parts[:1], ignore_index=True)
-    for f in schema.fields:
-        t = bool if isinstance(f.dataType, BooleanType) else _INT_DTYPES.get(type(f.dataType))
-        if t is not None and f.name in pdf.columns:
-            col = pdf[f.name]
-            if col.isna().any():
-                t = object if t is bool else "float64"
-            pdf[f.name] = col.astype(t)
-    return pdf
-
-
 def _iso_day(s: str) -> _date | None:
     """``s`` as a date when it is a plain ISO day (YYYY-MM-DD), else None."""
     try:
@@ -191,60 +169,72 @@ def _period_start(days: np.ndarray, freq: str) -> np.ndarray:
     return month.astype("datetime64[D]")
 
 
-def _periods_back(d: pd.Series, hi: int, count: int, freq: str) -> int:
-    """First row of the last ``count`` periods among the ascending date
-    strings ``d[:hi]``: step back one period start at a time."""
+def _upto(rows: pa.Table, day: _date | None) -> int:
+    """Number of point-cache ``rows`` dated on or before ``day`` (all of
+    them when None), by binary search on ``trade_date``."""
+    t = rows["trade_date"].to_numpy()
+    return len(t) if day is None else int(t.searchsorted(np.datetime64(day), "right"))
+
+
+def _periods_back(t: np.ndarray, hi: int, count: int, freq: str) -> int:
+    """First row of the last ``count`` periods among the ascending
+    datetime64[D] days ``t[:hi]``: step back one period start at a time."""
     lo = hi
     for _ in range(max(count, 0)):
         if not lo:
             break
-        first = _period_start(np.array([d.iat[lo - 1]], "datetime64[D]"), freq)[0]
-        lo = int(d.searchsorted(str(first)))
+        lo = int(t.searchsorted(_period_start(t[lo - 1:lo], freq)[0]))
     return lo
 
 
-def _fold_periods(parts: list[pd.DataFrame], freq: str, schema: StructType) -> pd.DataFrame:
-    """``resample_ohlc`` over point-cache daily slices (each one symbol's
-    rows in date order, no NaN in ``BAR_FIELDS``), as ``toPandas`` returns
-    it: ``trade_date`` is the period start (a ``datetime.date``), open the
-    first row's and close the last row's, high the max, low the min,
-    volume and money sums (long over an integral column), ``n_bars`` the
-    row count.
+def _fold_periods(rows: pa.Table, freq: str) -> pa.Table:
+    """``resample_ohlc`` over one symbol's daily point-cache rows (in date
+    order), with Spark's null and NaN rules: ``trade_date`` is the period
+    start (date32), open the first row's and close the last row's
+    (``min_by``/``max_by`` keep a null or NaN), high the max (NaN if any
+    value is NaN), low the min (NaN only if every value is), volume and
+    money sums (long over an integral column; a NaN propagates), and
+    ``n_bars`` the row count. max, min and sum skip nulls and give null
+    for a period whose values are all null; high and low are double.
 
     Spark's Sum adds a partition's rows left to right, and a ``bars``
     scan partition holds one ``trade_year`` in date order; so each sum
-    here adds left to right (a row-wise cumsum, not pandas' compensated
-    or numpy's pairwise sum). A period inside one year matches to the
-    bit; one spanning a year boundary (a late-December week) is two
-    partial sums added in Spark, so there parity holds up to that
-    association."""
-    pdf = pd.concat(parts, ignore_index=True)
-    n = len(pdf)
-    sym = pdf["symbol"].to_numpy()
-    per = _period_start(pdf["__d"].to_numpy().astype("datetime64[D]"), freq)
-    new = np.ones(n, bool)  # the row starts a (symbol, period) group
-    new[1:] = (per[1:] != per[:-1]) | (sym[1:] != sym[:-1])
+    here adds left to right (a row-wise cumsum, not numpy's pairwise sum).
+    A period inside one year matches to the bit; one spanning a year
+    boundary (a late-December week) is two partial sums added in Spark,
+    so there parity holds up to that association."""
+    n = len(rows)
+    per = _period_start(rows["trade_date"].to_numpy(), freq)
+    new = np.ones(n, bool)  # the row starts a period
+    new[1:] = per[1:] != per[:-1]
     ends = np.ones(n, bool)  # the row ends one
     ends[:-1] = new[1:]
     first, last = np.flatnonzero(new), np.flatnonzero(ends)
     g = np.cumsum(new) - 1
     pos = np.arange(n) - first[g]
 
-    def total(col):
-        integral = type(schema[col].dataType) in _INT_DTYPES
-        m = np.zeros((len(first), int(pos.max(initial=0)) + 1), "int64" if integral else "float64")
-        m[g, pos] = pdf[col].to_numpy(m.dtype)
+    def fold(col, fill, reduce):
+        a = rows[col]
+        some = np.logical_or.reduceat(a.is_valid().to_numpy(), first)
+        return pa.array(reduce(pc.fill_null(a, fill).to_numpy()), mask=~some)
+
+    def total(v):  # left to right within each period
+        m = np.zeros((len(first), int(pos.max(initial=0)) + 1), v.dtype)
+        m[g, pos] = v
         return m.cumsum(axis=1)[:, -1]
 
-    return pd.DataFrame({
-        "symbol": sym[first],
-        "trade_date": per[first].astype(object),
-        "open": pdf["open"].to_numpy()[first],
-        "high": np.maximum.reduceat(pdf["high"].to_numpy(), first),
-        "low": np.minimum.reduceat(pdf["low"].to_numpy(), first),
-        "close": pdf["close"].to_numpy()[last],
-        "volume": total("volume"),
-        "money": total("money"),
+    def sums(col):
+        return fold(col, 0, lambda v: total(v.astype("int64" if v.dtype.kind == "i" else "float64")))
+
+    return pa.table({
+        "symbol": rows["symbol"].take(first),
+        "trade_date": pa.array(per[first]),
+        "open": rows["open"].take(first),
+        "high": fold("high", -np.inf, lambda v: np.maximum.reduceat(v, first)),
+        "low": fold("low", np.nan, lambda v: np.fmin.reduceat(v, first)),
+        "close": rows["close"].take(last),
+        "volume": sums("volume"),
+        "money": sums("money"),
         "n_bars": last - first + 1,
     })
 
@@ -271,19 +261,22 @@ class PTradeDataAPI:
     cache, done Spark-style). Partition pruning stops mattering because the
     scan is already in memory.
 
-    ``point_cache=True`` keeps one client-side pandas cache of each
-    symbol's whole history, keyed (kind, symbol, fq, minutes), and answers
-    from it in pandas (~1-10 ms against a ~100-250 ms Spark job floor; the
-    reference v1.0 is SQLite + LRU with 30 ms point lookups). A call pulls
-    every symbol it finds missing in one Spark query per kind
-    (``_point_frames``). It serves:
+    ``point_cache=True`` keeps each symbol's whole history client-side as
+    an Arrow table, keyed (kind, symbol, fq, minutes), and answers from it
+    (~1-10 ms against a ~100-250 ms Spark job floor; the reference v1.0 is
+    SQLite + LRU with 30 ms point lookups). A call pulls every symbol it
+    finds missing in one Spark ``toArrow`` query per kind
+    (``_point_frames``); a read cuts each symbol's rows by binary search on
+    the date and converts only the answer to pandas. Arrow keeps a null
+    apart from a stored NaN, as Spark does, and ``to_pandas`` gives each
+    answer the dtypes ``toPandas`` gives the same rows. It serves:
 
     - ``get_price`` / ``get_history`` at daily and minute frequencies for
       stored bar fields (``BAR_FIELDS`` daily, ``MINUTE_FIELDS`` minute),
       kind ``"bars"`` under that fq and width;
-    - the resampled frequencies (``1w``/``1M``/``1q``/``1y``), folded in
-      pandas from the cached daily rows;
-    - daily ``fill='pre'`` when the rows it would fill hold no NaN;
+    - the resampled frequencies (``1w``/``1M``/``1q``/``1y``), folded from
+      the cached daily rows with Spark's null and NaN rules;
+    - daily ``fill='pre'``, a forward fill of nulls over the cached rows;
     - ``get_fundamentals(table='valuation')``: the last row on or before
       ``date`` (the last row without one);
     - ``get_stock_status`` for ``'ST'`` and ``'HALT'``: the row on exactly
@@ -293,13 +286,13 @@ class PTradeDataAPI:
 
     Answers equal the Spark path's in values, dtypes and index. Minute
     ``fill='pre'`` (it needs the session grid), other daily bar columns,
-    ``'DELISTING'``, the other fundamentals tables, and any bar read whose
-    rows hold a NaN (pandas cannot tell a stored NaN from a null, which
-    Spark treats apart) stay on Spark. The point cache and the listing
-    memo are a snapshot taken at first use: after a rebuild of the
-    warehouse, build a new client, as with ``cache_tables``. Per-symbol
-    history is a few thousand daily (a few 10k minute) rows; the 100 TB
-    answer remains the vectorized batch path."""
+    ``'DELISTING'``, the other fundamentals tables, and a date bound that
+    is not a plain ISO day (Spark casts it as its date comparison does)
+    stay on Spark. The point cache and the listing memo are a snapshot
+    taken at first use: after a rebuild of the warehouse, build a new
+    client, as with ``cache_tables``. Per-symbol history is a few thousand
+    daily (a few 10k minute) rows; the 100 TB answer remains the
+    vectorized batch path."""
 
     def __init__(
         self,
@@ -311,13 +304,11 @@ class PTradeDataAPI:
         self.spark = warehouse.spark
         self._cache_tables = cache_tables
         self._cached: dict[str, DataFrame] = {}
-        self._trade_days: list[str] | None = None
+        self._trade_days: list[_date] | None = None
         self._point_cache = point_cache
         self._listings: list | None = None  # see get_Ashares
-        # (kind, symbol, fq, minutes) → (rows, schema); see _point_frames
-        self._point_rows: dict[
-            tuple[str, str, str | None, int | None], tuple[pd.DataFrame, StructType]
-        ] = {}
+        # (kind, symbol, fq, minutes) → rows; see _point_frames
+        self._point_rows: dict[tuple[str, str, str | None, int | None], pa.Table] = {}
 
     def _table(self, name: str) -> DataFrame:
         if not self._cache_tables:
@@ -369,7 +360,9 @@ class PTradeDataAPI:
         import bisect
 
         days = self._trading_days_cached()
-        anchor = _to_date_str(date) if date else days[-1]
+        anchor = _iso_day(_to_date_str(date)) if date else days[-1]
+        if anchor is None:
+            raise ValueError(f"date={date!r} is not a day (a date, YYYY-MM-DD or YYYYMMDD)")
         # index of the last trading day <= anchor (the day=0 answer)
         i = bisect.bisect_right(days, anchor) - 1
         if i < 0:
@@ -379,11 +372,11 @@ class PTradeDataAPI:
             raise ValueError(
                 f"offset {day} from {anchor} leaves the known calendar"
             )
-        return _date.fromisoformat(days[j])
+        return days[j]
 
-    def _trading_days_cached(self) -> list[str]:
+    def _trading_days_cached(self) -> list[_date]:
         if self._trade_days is None:
-            self._trade_days = self.get_trade_days()
+            self._trade_days = [_date.fromisoformat(d) for d in self.get_trade_days()]
         return self._trade_days
 
     # -- bars --------------------------------------------------------------
@@ -477,14 +470,16 @@ class PTradeDataAPI:
         )
         return mb
 
-    def _point_frames(self, kind, securities, fq=None, minutes=None) -> list:
-        """The point cache's (rows, schema) of each security, keyed (kind,
+    def _point_frames(self, kind, securities, fq=None, minutes=None) -> list[pa.Table]:
+        """The point cache's Arrow rows of each security, keyed (kind,
         symbol, fq, minutes). Kind ``"bars"`` holds the stored bar fields
         at daily (``minutes`` None) or N-minute width under ``fq``; any
         other kind is that daily table's whole rows. Every security the
-        cache lacks is pulled in one Spark query and split by symbol. Rows
-        are in time order with the date string in ``__d``; an unknown
-        symbol holds none."""
+        cache lacks is pulled in one ``toArrow`` query, ordered by (symbol,
+        trade_date) and split into zero-copy per-symbol slices; an unknown
+        symbol holds none. A minute bar's ``trade_date`` is held as
+        toPandas gives it: the wall time in the session time zone, without
+        the zone, in ns."""
         keys = [(kind, s, fq, minutes) for s in securities]
         missing = [k for k in dict.fromkeys(keys) if k not in self._point_rows]
         if missing:
@@ -496,13 +491,18 @@ class PTradeDataAPI:
                 )
             else:
                 df = self._table(kind).filter(F.col("symbol").isin(syms))
-            schema = df.schema
-            pdf = df.toPandas().sort_values("trade_date", kind="mergesort")
-            pdf["__d"] = pdf["trade_date"].astype(str).str[:10]
-            groups = dict(list(pdf.groupby("symbol", sort=False)))
+            tbl = df.toArrow()
+            if minutes:
+                ts = pc.local_timestamp(tbl["trade_date"]).cast(pa.timestamp("ns"))
+                tbl = tbl.set_column(tbl.schema.get_field_index("trade_date"), "trade_date", ts)
+            tbl = tbl.sort_by([("symbol", "ascending"), ("trade_date", "ascending")])
+            counts = pc.value_counts(tbl["symbol"]).flatten()
+            held, at = {}, 0
+            for sym, n in sorted(zip(*(c.to_pylist() for c in counts))):  # table order
+                held[sym] = tbl.slice(at, n)
+                at += n
             for k in missing:
-                rows = groups.get(k[1], pdf.iloc[:0]).reset_index(drop=True)
-                self._point_rows[k] = (rows, schema)
+                self._point_rows[k] = held.get(k[1], tbl.slice(0, 0))
         return [self._point_rows[k] for k in keys]
 
     def _bar_rows(
@@ -522,67 +522,68 @@ class PTradeDataAPI:
         With ``point_cache`` on, the answer comes from ``_cached_bar_rows``
         for stored bar fields at daily and minute width and for every
         resampled frequency (folded from the cached daily rows), except
-        minute ``fill='pre'``, which needs the Spark session grid."""
+        minute ``fill='pre'``, which needs the Spark session grid, and a
+        bound that is not a plain ISO day."""
         fq = None if fq == "none" else fq  # one cache entry per unadjusted history
         minutes = freq[1] if isinstance(freq, tuple) else None
         stored = MINUTE_FIELDS if minutes else BAR_FIELDS
+        first, last = (_iso_day(b) if b else None for b in (start, end))
         if (
             self._point_cache and securities and not (minutes and fill == "pre")
             and (isinstance(freq, str) or set(fields) <= set(stored))
+            and (first or not start) and (last or not end)
         ):
-            pdf = self._cached_bar_rows(
-                securities, fields, fq, freq, start, end, count, end_inclusive, fill
+            return self._cached_bar_rows(
+                securities, fields, fq, freq, first, last, count, end_inclusive, fill
             )
-            if pdf is not None:
-                return pdf
         return self._bar_query(
             securities, fields, fq, freq, start, end, count, end_inclusive, fill
         ).orderBy("trade_date", "symbol").toPandas()
 
     def _cached_bar_rows(
         self, securities, fields, fq, freq, start, end, count, end_inclusive, fill,
-    ) -> pd.DataFrame | None:
-        """``_bar_rows`` from the per-symbol histories ``_point_frames``
-        pulls through ``_bar_query``: each symbol's rows are sliced by
-        binary search on the date, and resampled reads fold the daily
-        slice with ``_fold_periods``. Daily ``fill='pre'`` answers with the
-        unfilled slice: Spark's forward fill replaces only nulls, so it is
-        the identity over rows that hold none.
+    ) -> pd.DataFrame:
+        """``_bar_rows`` from the per-symbol Arrow rows ``_point_frames``
+        pulls through ``_bar_query``, with ``start``/``end`` as dates. Each
+        symbol's rows are cut by binary search on ``trade_date`` (a minute
+        bar's timestamp is searched by its day), and only the answer's
+        slices are converted to pandas, once. Resampled reads fold the
+        daily slice with ``_fold_periods``.
 
-        toPandas maps null and NaN alike to NaN, while Spark tells them
-        apart (the forward fill fills null only; max/min order NaN above
-        every value; sum skips null but propagates NaN; min_by can return
-        a null open). So when a row the answer reads holds a NaN (the
-        resample's ``BAR_FIELDS`` over the slice, or ``fill='pre'``'s
-        fields over the rows up to the end bound) this returns None and
-        the whole call goes to Spark."""
+        ``fill='pre'`` (get_history, which reads back from the end bound)
+        forward-fills ``fields`` over every row, or folded period, up to
+        the end bound, as Spark's ``forward_fill`` does before keeping the
+        last ``count``: ``fill_null_forward`` fills nulls only and carries
+        a NaN as a value."""
         minutes = freq[1] if isinstance(freq, tuple) else None
         resampled = isinstance(freq, str)
+        if end and (count is None or end_inclusive):
+            end += timedelta(days=1)  # the read stops before this day
         parts = []
-        for rows, schema in self._point_frames(
+        for rows in self._point_frames(
             "bars", list(dict.fromkeys(securities)), fq, minutes
         ):
-            d = rows["__d"]  # in date order: bound by binary search
+            t = rows["trade_date"].to_numpy()
+            hi = int(t.searchsorted(np.datetime64(end))) if end else len(t)
             if count is None:
-                lo = d.searchsorted(start) if start else 0
-                hi = d.searchsorted(end, "right") if end else len(rows)
+                lo = int(t.searchsorted(np.datetime64(start))) if start else 0
             else:
-                hi = d.searchsorted(end, "right" if end_inclusive else "left") if end else len(rows)
-                lo = _periods_back(d, hi, count, freq) if resampled else max(hi - count, 0)
-            parts.append(rows.iloc[lo:hi])
-            if resampled:
-                read = parts[-1][BAR_FIELDS]
-            elif fill == "pre":
-                read = rows.iloc[:hi][fields]
+                lo = _periods_back(t, hi, count, freq) if resampled else max(hi - count, 0)
+            if fill == "pre":
+                part = rows.slice(0, hi)
+                if resampled:
+                    part = _fold_periods(part, freq)
+                    lo = len(part) - len(np.unique(_period_start(t[lo:hi], freq)))
+                for f in dict.fromkeys(fields):
+                    i = part.schema.get_field_index(f)
+                    part = part.set_column(i, f, pc.fill_null_forward(part[f]))
+                parts.append(part.slice(lo))
+            elif resampled:
+                parts.append(_fold_periods(rows.slice(lo, max(hi - lo, 0)), freq))
             else:
-                continue
-            if read.isna().to_numpy().any():
-                return None
-        pdf = _fold_periods(parts, freq, schema) if resampled else _as_to_pandas(parts, schema)
-        return (
-            pdf.sort_values(["trade_date", "symbol"], kind="mergesort")
-            .reset_index(drop=True)[["symbol", "trade_date", *fields]]
-        )
+                parts.append(rows.slice(lo, max(hi - lo, 0)))
+        tbl = pa.concat_tables(parts).sort_by([("trade_date", "ascending"), ("symbol", "ascending")])
+        return tbl.select(["symbol", "trade_date", *fields]).to_pandas()
 
     def _bar_query(
         self, securities, fields, fq, freq, start=None, end=None, count=None,
@@ -1307,26 +1308,22 @@ class PTradeDataAPI:
         stocks = _as_list(stocks)
         if query_type not in ("ST", "HALT", "DELISTING"):
             raise ValueError(query_type)
-        if query_type == "DELISTING":
-            meta = self._table("stock_metadata").filter(F.col("symbol").isin(stocks))
-            d = _to_date_str(query_date) if query_date else None
-            rows = meta.select("symbol", "de_listed_date").collect()
-            return {
-                r["symbol"]: (
-                    r["de_listed_date"] is not None
-                    and (d is None or r["de_listed_date"].isoformat() <= d)
-                )
-                for r in rows
-            }
-        col = "is_st" if query_type == "ST" else "is_halt"
         d = _to_date_str(query_date) if query_date else None
-        if self._point_cache:
+        if query_type == "DELISTING":
+            # Spark compares the dates, casting ``d`` as every date filter does
+            gone = F.col("de_listed_date").isNotNull()
+            if d:
+                gone &= F.col("de_listed_date") <= d
+            meta = self._table("stock_metadata").filter(F.col("symbol").isin(stocks))
+            return {r[0]: r[1] for r in meta.select("symbol", gone).collect()}
+        col = "is_st" if query_type == "ST" else "is_halt"
+        day = _iso_day(d) if d else None
+        if self._point_cache and (d is None or day):
             found = {}
-            for s, (rows, _) in zip(stocks, self._point_frames("stock_status", stocks)):
-                i = len(rows) if d is None else rows["__d"].searchsorted(d, "right")
-                if i and (d is None or rows["__d"].iat[i - 1] == d):
-                    flag = rows[col].iat[i - 1]
-                    found[s] = not pd.isna(flag) and bool(flag)
+            for s, rows in zip(stocks, self._point_frames("stock_status", stocks)):
+                i = _upto(rows, day)
+                if i and (day is None or rows["trade_date"][i - 1].as_py() == day):
+                    found[s] = bool(rows[col][i - 1].as_py())  # a null flag is None
             return {s: found.get(s, False) for s in stocks}
         st = self._table("stock_status").filter(F.col("symbol").isin(stocks))
         if d:
@@ -1411,13 +1408,14 @@ class PTradeDataAPI:
         as-of is the latest trade date <= query date (suspension-safe).
         Rows follow ``stocks``, duplicates dropped."""
         d = _to_date_str(date) if date is not None else None
+        day = _iso_day(d) if d else None
         order = list(dict.fromkeys(stocks))
-        if self._point_cache and order:
+        if self._point_cache and order and (d is None or day):
             parts = []
-            for rows, schema in self._point_frames("valuation", order):
-                i = len(rows) if d is None else rows["__d"].searchsorted(d, "right")
-                parts.append(rows.iloc[i - 1:i] if i else rows.iloc[:0])
-            pdf = _as_to_pandas(parts, schema).drop(columns="__d")
+            for rows in self._point_frames("valuation", order):
+                i = _upto(rows, day)
+                parts.append(rows.slice(max(i - 1, 0), min(i, 1)))
+            pdf = pa.concat_tables(parts).to_pandas()
         else:
             v = self._table("valuation").filter(F.col("symbol").isin(order))
             if d is not None:

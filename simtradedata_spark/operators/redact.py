@@ -15,7 +15,7 @@ of the beyond-reference LLM-pipeline surface alongside dedup/decontam.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # (kind, pattern, mask) — applied in order. The 18-digit national-ID rule
@@ -45,14 +45,3 @@ def pii_counts(col: Column | str) -> list[Column]:
         for kind, pat, _ in PII_PATTERNS
     ]
 
-
-def redact_pii(
-    df: DataFrame, text_col: str = "text", out_col: str = "text"
-) -> DataFrame:
-    """df + redacted text (in place by default) + per-kind match counts."""
-    c = F.col(text_col)
-    return df.select(
-        *[col for col in df.columns if col != text_col or out_col != text_col],
-        *pii_counts(c),
-        redact_text(c).alias(out_col),
-    )

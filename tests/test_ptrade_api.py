@@ -89,6 +89,12 @@ def test_stock_status(api, market):
     ).first()["symbol"]
     dl = api.get_stock_status([delist_sym], "DELISTING", days[-1])
     assert dl[delist_sym] is True
+    # dates compare as dates: as strings, "2023-3-23" > "2023-05-02"
+    gone = api.get_stock_info(delist_sym, "de_listed_date").iloc[0, 0]
+    for k, want in ((-40, False), (40, True)):
+        q = gone + _dt.timedelta(days=k)
+        q = f"{q.year}-{q.month}-{q.day}"
+        assert api.get_stock_status([delist_sym], "DELISTING", q) == {delist_sym: want}, q
 
 
 def test_fundamentals_no_lookahead(api, warehouse):
@@ -436,6 +442,9 @@ def test_get_trading_day_offsets(api):
         sat += datetime.timedelta(days=1)
     prev = api.get_trading_day(0, sat.isoformat()).isoformat()
     assert prev in days and prev < sat.isoformat()
+    # a day that is not a plain ISO day is refused, not compared as a string
+    with pytest.raises(ValueError, match="not a day"):
+        api.get_trading_day(0, "2022-3-1")
 
 
 def test_get_stock_name(api):
@@ -907,19 +916,23 @@ def test_point_cache_resampled_parity(warehouse):
 
 
 def _gappy_bars(spark, tmp_path):
-    """A tmp warehouse over three weeks: 600009.SS with a null close on
-    days 3-4, 600010.SS with a stored NaN close on day 5, 600011.SS with
-    no gap. ``volume`` is a long column."""
+    """A tmp warehouse over three weeks: 600009.SS with null prices on
+    days 3-4 and 13 (the second week's last day, so its close is null)
+    and a null volume on day 4, 600010.SS with stored NaN prices on days
+    5 and 7 (the second week's first day), 600011.SS with no gap.
+    ``volume`` is a long column."""
     from simtradedata_spark.sources.tables import Warehouse
 
     base = _dt.date(2022, 3, 7)  # a Monday
     rows = []
-    for sym, gap, bad in (("600009.SS", (3, 4), None), ("600010.SS", (5,), float("nan")),
+    for sym, gap, bad in (("600009.SS", (3, 4, 13), None),
+                          ("600010.SS", (5, 7), float("nan")),
                           ("600011.SS", (), None)):
         for i in range(19):
             px = bad if i in gap else 10.0 + i * 0.37
+            vol = None if (sym, i) == ("600009.SS", 4) else 100 + i
             rows.append((sym, base + _dt.timedelta(days=i), px, px, px, px,
-                         100 + i, 1000.1 * (i + 1)))
+                         vol, 1000.1 * (i + 1)))
     wh = Warehouse(spark, str(tmp_path / "wh"))
     wh.write("bars", spark.createDataFrame(
         rows,
@@ -929,32 +942,62 @@ def _gappy_bars(spark, tmp_path):
     return wh, base
 
 
-def test_point_cache_nan_or_null_rows_go_to_spark(spark, tmp_path):
-    """toPandas reads a null and a stored NaN both as NaN, and Spark treats
-    them apart: the forward fill fills only the null, max/min/sum and the
-    weekly open/close differ between the two. A point-cache read whose
-    rows hold either must answer as the Spark path does; rows without one
-    are served from the cache (long ``volume`` sums stay int64)."""
+def _assert_gappy_parity(spark, tmp_path, gap_sym):
+    """Point-cache reads over ``_gappy_bars`` equal the Spark path's, for
+    ``gap_sym``, the clean symbol, and all three together: daily
+    ``fill='pre'``, ``1w`` ``get_history`` with ``fill='pre'`` and ``1w``
+    ``get_price``. Once warm, the same reads run no Spark job."""
     from simtradedata_spark.api.ptrade import PTradeDataAPI
+    from simtradedata_spark.runner import _next_ids
 
     wh, base = _gappy_bars(spark, tmp_path)
     slow, fast = PTradeDataAPI(wh), PTradeDataAPI(wh, point_cache=True)
     end = str(base + _dt.timedelta(days=19))
     syms = ["600009.SS", "600010.SS", "600011.SS"]
-    for sec in (syms, *syms):
+    calls = [
+        call
+        for sec in (syms, gap_sym, "600011.SS")
         for call in (
-            lambda api: api.get_history(19, "1d", ["close", "high"], sec,
-                                        fill="pre", current_date=end),
-            lambda api: api.get_history(3, "1w", ["close", "n_bars"], sec,
-                                        fill="pre", current_date=end),
-            lambda api: api.get_price(sec, str(base), end, frequency="1w"),
-        ):
-            _assert_same_answer(call(fast), call(slow))
+            lambda api, sec=sec: api.get_history(19, "1d", ["close", "high"], sec,
+                                                 fill="pre", current_date=end),
+            lambda api, sec=sec: api.get_history(3, "1w", ["close", "n_bars"], sec,
+                                                 fill="pre", current_date=end),
+            lambda api, sec=sec: api.get_price(sec, str(base), end, frequency="1w"),
+        )
+    ]
+    for call in calls:
+        _assert_same_answer(call(fast), call(slow))
+    for call in calls:
+        jobs0 = _next_ids(spark)[0]
+        got = call(fast)
+        assert _next_ids(spark)[0] == jobs0
+        _assert_same_answer(got, call(slow))
+    return fast, base, end
+
+
+def test_point_cache_null_rows_served_from_cache(spark, tmp_path):
+    """Arrow keeps a null apart from a stored NaN, as Spark does: the
+    forward fill fills the null close of 600009.SS, and the weekly fold
+    skips it in max/min/sum and keeps it in open/close. Reads over it
+    answer as the Spark path does, with no Spark job once warm (long
+    ``volume`` sums stay int64)."""
+    fast, base, end = _assert_gappy_parity(spark, tmp_path, "600009.SS")
     filled = fast.get_history(19, "1d", "close", "600009.SS", fill="pre",
                               current_date=end)
-    assert filled["close"].notna().all()  # the Spark forward fill ran
+    assert filled["close"].notna().all()  # the forward fill ran
     weekly = fast.get_price("600011.SS", str(base), end, frequency="1w")
     assert weekly["volume"].dtype == "int64" and len(weekly) == 3
+
+
+def test_point_cache_nan_rows_served_from_cache(spark, tmp_path):
+    """A stored NaN close (600010.SS) is a value to Spark: the forward
+    fill carries it, max gives NaN when any value is NaN, min only when
+    every value is, and sums propagate it. Reads over it answer as the
+    Spark path does, with no Spark job once warm."""
+    fast, base, end = _assert_gappy_parity(spark, tmp_path, "600010.SS")
+    filled = fast.get_history(19, "1d", "close", "600010.SS", fill="pre",
+                              current_date=end)
+    assert filled["close"].isna().sum() == 2  # the NaNs are kept, not filled
 
 
 def test_point_cache_get_ashares_parity(warehouse):
@@ -1118,3 +1161,40 @@ def test_point_cache_tables_no_spark_after_warm(warehouse):
         fast.get_stock_status(stocks, "DELISTING")
     with pytest.raises(TypeError):
         fast.get_fundamentals(stocks, "growth_ability", date="2022-06-15")
+
+
+# A date bound the way a caller may spell it. Spark casts each to a date;
+# "2022-3-1" is not a plain ISO day, so the point cache sends it to Spark.
+_DAY_SPELLINGS = {
+    "date": lambda d: d,
+    "datetime": lambda d: _dt.datetime(d.year, d.month, d.day, 9, 30),
+    "timestamp": lambda d: pd.Timestamp(d) + pd.Timedelta(hours=15),
+    "yyyymmdd": lambda d: d.strftime("%Y%m%d"),
+    "unpadded": lambda d: f"{d.year}-{d.month}-{d.day}",
+}
+
+
+@pytest.mark.parametrize("spelling", list(_DAY_SPELLINGS))
+def test_point_cache_date_bounds_match_spark(warehouse, spelling):
+    """Every spelling of a date bound gets the Spark path's answer from
+    the point cache: a datetime or Timestamp counts as its day, as Spark's
+    cast to a date counts it."""
+    slow, fast = _plain_and_point(warehouse)
+    day = _DAY_SPELLINGS[spelling]
+    a, b = day(_dt.date(2022, 3, 1)), day(_dt.date(2022, 3, 4))
+    sym, pair = "600000.SS", ["600000.SS", "000001.SZ"]
+    calls = [
+        lambda api: api.get_price(sym, a, b, fields=["close"]),
+        lambda api: api.get_price(pair, a, b, frequency="1w", fields=["close"]),
+        lambda api: api.get_history(3, "1d", "close", pair, current_date=b),
+        lambda api: api.get_history(3, "1d", "close", sym, current_date=b, include=True),
+        lambda api: api.get_fundamentals(pair, "valuation", fields=["pb"], date=b),
+    ]
+    for call in calls:
+        _assert_same_answer(call(fast), call(slow))
+    assert len(fast.get_price(sym, a, b)) == 4
+    st_day = day(_dt.date(2023, 9, 1))  # 600002.SS is ST then
+    stocks = ["600002.SS", "600000.SS"]
+    for qt in ("ST", "HALT"):
+        assert fast.get_stock_status(stocks, qt, st_day) == slow.get_stock_status(stocks, qt, st_day)
+    assert fast.get_stock_status(stocks, "ST", st_day) == {"600002.SS": True, "600000.SS": False}
