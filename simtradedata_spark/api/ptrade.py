@@ -213,7 +213,7 @@ def _fold_periods(rows: pa.Table, freq: str) -> pa.Table:
     g = np.cumsum(new) - 1
     pos = np.arange(n) - first[g]
 
-    def fold(col, fill, reduce):
+    def fold(col, fill, reduce):  # null where a period's values all are
         a = rows[col]
         some = np.logical_or.reduceat(a.is_valid().to_numpy(), first)
         return pa.array(reduce(pc.fill_null(a, fill).to_numpy()), mask=~some)
